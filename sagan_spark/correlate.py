@@ -15,27 +15,31 @@ Spark partition-local dict entry:
                    state) entries compared direction-specifically
                    (flexbit-mmap.c:61-1494)
 
-Execution strategy (scale notes):
+Execution strategy — ONE plan, batch and streaming alike:
 
-* **Fast path** (all correlation keys conv-derived — the common
-  transcript case): ONE ``repartition(conv_id) → sortWithinPartitions →
-  mapInPandas`` running a single per-row fold in EXACT engine order
-  (engine.c:1132-1570: flexbit/xbit conditions gate → after → threshold
-  → xbit/flexbit sets only when not suppressed).  One shuffle of matched
-  rows, one Arrow round-trip, and every cross-clause interaction —
-  xbit⊕after, multi-track xbits, flexbit counts — is handled because the
-  fold IS the engine's per-event order.
-* **General path** (IP-extracted keys): one keyed stage per clause type,
-  shuffling only the rows that carry the stage's key.  Cross-clause
-  combinations (xbit/flexbit + after/threshold in ONE rule) are rejected
-  here at plan time — their state keys differ, so no single partitioning
-  co-locates the interaction; the reference runs them in one
-  shared-memory pass (engine.c:1132/1516/1560) that has no distributed
-  equivalent without a serial stage.  Flexbit rules with extracted IPs
-  (or the 'none' direction, flexbit-mmap.c:124) fold per flexbit
-  NAME-GROUP (flexbit_groups): entries are name-scoped, so independent
-  names partition exactly; only a `count` clause (name-agnostic scan)
-  couples groups into one serial fold.
+* The reference evaluates every store in one engine-order pass over
+  shared memory (engine.c:1132-1570).  ``unified_fold`` is that pass; it
+  is exact over any row set that holds every row sharing state with any
+  of its rows.  Correlation is therefore only a question of the
+  partition key, and ``state_key_cols`` is the one planner for it.
+* A union-find over the stores (``state_groups``) splits the ruleset
+  into clusters that share no state: after/threshold rules join by sid,
+  xbit rules by name, flexbit rules by name, and a flexbit ``count``
+  clause (a name-agnostic scan) joins every flexbit rule.  A rule that
+  touches several stores joins them, so each cluster owns its state
+  completely.  The partition key is data-derived in the sense of
+  *Jigsaw* (SIGMOD 2021): it comes from which stores the rules share.
+* Each cluster gets the finest exact key (``cluster_modes``):
+  ``conv`` — every key is a function of conv_id (the host-fallback
+  addressing of engine.c:967-1045), so the key is conv_id; ``store`` —
+  every row touches one store with one key, so the key is that store's
+  key; ``serial`` — anything else (cross-store rules, multi-track xbits,
+  dual-track after+threshold), so the whole cluster is one group.
+* Batch: ``repartition(key, cluster) → sortWithinPartitions → one
+  mapInPandas`` over every matched row (stateless rows key by conv_id).
+  The cluster column is the hot-conversation salt: a hot conversation's
+  rows spread across its independent clusters.  Streaming:
+  ``groupBy(key).applyInPandasWithState`` over the same fold.
 * Deterministic (epoch, conv_id, turn_idx, rule_idx) order inside each
   key — the batch replacement for the reference's wall-clock arrival
   order (SURVEY §2.6).
@@ -61,6 +65,9 @@ CORR_SCHEMA = (MATCH_SCHEMA +
 
 _SORT = ["epoch", "conv_id", "turn_idx", "rule_idx"]
 
+# composite state-key separator
+GSEP = "\x1f"
+
 
 def _track_conv_derived(tracks: tuple[str, ...]) -> bool:
     """Under fallback addressing (engine.c:967-1045) ip_src/ip_dst are
@@ -72,59 +79,49 @@ def _track_conv_derived(tracks: tuple[str, ...]) -> bool:
     return "by_src" in tracks or "by_dst" in tracks
 
 
-def has_none_flexbits(ruleset: RuleSet) -> bool:
-    """'none'-direction flexbit state is shared across conv keys (any
-    src/dst matches, flexbit-mmap.c:124) — but only for the clauses that
-    actually compare directions (isset/isnotset/unset); a 'set' clause
-    ignores its direction field entirely."""
-    return any(fb.direction == "none" for r in ruleset.rules
-               for fb in r.flexbits
-               if fb.action in ("isset", "isnotset", "unset"))
-
-
-def conv_keyed_only(ruleset: RuleSet,
-                    ignore_none_flexbits: bool = False) -> bool:
-    """True when every stateful rule's correlation keys are functions of
-    conv_id alone (the host-fallback path, engine.c:967-1045): no
-    parse_src_ip/parse_dst_ip/parse_port/normalize on a rule that has
-    after/threshold/xbits/flexbits, every after/threshold track set
-    contains a conv-derived component (see _track_conv_derived), and no
-    flexbit uses the cross-conv 'none' direction.  Then ONE
-    conv_id-hash repartition co-locates every correlation key — the
-    north star's explicit conv_id partitioning — and the whole stateful
-    stage is a single shuffle + one engine-order fold.
-
-    ``ignore_none_flexbits=True`` answers the weaker question "is
-    conv_id the only cross-rule key, modulo 'none' flexbit sharing?" —
-    the streaming correlator uses it to route such rulesets through a
-    single global state group instead of rejecting them."""
-    for r in ruleset.rules:
-        if not (r.after or r.threshold or r.xbits or r.flexbits):
-            continue
-        if (r.parse_src_ip or r.parse_dst_ip or r.parse_port or
-                r.normalize):
-            return False
-        if r.after and not _track_conv_derived(r.after.tracks):
-            return False
-        if r.threshold and not _track_conv_derived(r.threshold.tracks):
-            return False
-    if not ignore_none_flexbits and has_none_flexbits(ruleset):
+def _conv_derived(rule) -> bool:
+    """Every state key of the rule is a function of conv_id alone: no
+    parse_src_ip/parse_dst_ip/parse_port/normalize, every after/threshold
+    track set has a conv-derived component (_track_conv_derived), and no
+    flexbit reader uses the cross-conv 'none' direction (any src/dst
+    matches, flexbit-mmap.c:124; a 'set' ignores its direction)."""
+    if not (rule.after or rule.threshold or rule.xbits or rule.flexbits):
+        return True
+    if (rule.parse_src_ip or rule.parse_dst_ip or rule.parse_port or
+            rule.normalize):
         return False
-    return True
+    if rule.after and not _track_conv_derived(rule.after.tracks):
+        return False
+    if rule.threshold and not _track_conv_derived(rule.threshold.tracks):
+        return False
+    return not any(fb.direction == "none"
+                   and fb.action in ("isset", "isnotset", "unset")
+                   for fb in rule.flexbits)
+
+
+def _single_store(rule) -> bool:
+    """Every row of the rule touches exactly one store with one key:
+    after and/or threshold on the same track set (both sid-scoped, one
+    track value per row), or single-track xbits, or flexbits."""
+    kinds = (bool(rule.after or rule.threshold) + bool(rule.xbits) +
+             bool(rule.flexbits))
+    if kinds != 1:
+        return False
+    if rule.after and rule.threshold:
+        return rule.after.tracks == rule.threshold.tracks
+    return len({xb.track for xb in rule.xbits}) <= 1
 
 
 def state_groups(ruleset: RuleSet) -> dict[int, int]:
-    """rule_idx → state-interaction group id.
+    """rule_idx → state cluster id.
 
-    The hot-conversation salt (north rule: "salted repartition for hot
-    conversations"), exact by construction: after/threshold state is
-    keyed by sid (after.c:113-117, threshold.c:118-121) and xbit/flexbit
-    state by name (xbit-mmap.c:88-91, flexbit-mmap.c name match), so two
-    rules can only interact when they share an xbit/flexbit NAME.
-    Union-find over shared names partitions the ruleset into independent
-    groups; repartitioning by (conv_id, group) splits a hot
-    conversation's rows across #groups partitions with bit-identical
-    results — no cross-partition state can exist."""
+    Union-find over the stores: after/threshold state is keyed by sid
+    (after.c:113-117, threshold.c:118-121), xbit state by name
+    (xbit-mmap.c:88-91) and flexbit state by name (flexbit-mmap.c name
+    match); a flexbit `count` clause scans entries of EVERY name
+    (flexbit-mmap.c:683-744), so its presence joins all flexbit rules.
+    Rules in different clusters share no state, so any partitioning that
+    keeps each cluster's interacting rows together is bit-identical."""
     parent: dict = {}
 
     def find(x):
@@ -136,127 +133,67 @@ def state_groups(ruleset: RuleSet) -> dict[int, int]:
     def union(a, b):
         parent[find(a)] = find(b)
 
-    # a flexbit `count` clause scans entries of EVERY name
-    # (flexbit-mmap.c:683-744), so its presence couples all flexbit rules
     has_count = any(fb.action == "count"
                     for r in ruleset.rules for fb in r.flexbits)
     for i, r in enumerate(ruleset.rules):
         node = ("r", i)
         find(node)
+        if r.after or r.threshold:
+            union(node, ("sid", r.sid))
         for xb in r.xbits:
             union(node, ("x", xb.name))
         for fb in r.flexbits:
             union(node, ("f", fb.name))
         if has_count and r.flexbits:
-            union(node, ("f", "__all__"))
+            union(node, ("count",))
     roots: dict = {}
-    out: dict[int, int] = {}
-    for i in range(len(ruleset.rules)):
-        root = find(("r", i))
-        out[i] = roots.setdefault(root, len(roots))
-    return out
+    return {i: roots.setdefault(find(("r", i)), len(roots))
+            for i in range(len(ruleset.rules))}
 
 
-def flexbit_groups(ruleset: RuleSet) -> dict[int, int]:
-    """rule_idx → flexbit state-group id, for flexbit rules only.
-
-    Flexbit entries live in per-NAME lists (flexbit-mmap.c name match on
-    every isset/unset/set scan) — even the 'none' direction only widens
-    the (src, dst) comparison, never the name scope — so rules interact
-    iff they share a flexbit NAME.  The one name-agnostic reader is the
-    `count` clause (flexbit-mmap.c:683-744 scans entries of every name),
-    whose presence couples all flexbit rules into a single group.
-    Union-find over shared names; the general-path fold partitions by
-    this group id, so the stage is serial ONLY per coupled group, not
-    globally (the round-2 repartition(1) scale-killer)."""
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        parent[find(a)] = find(b)
-
-    has_count = any(fb.action == "count"
-                    for r in ruleset.rules for fb in r.flexbits)
+def cluster_modes(ruleset: RuleSet,
+                  groups: dict[int, int] | None = None) -> dict[int, str]:
+    """cluster id → 'conv' (every rule _conv_derived), 'store' (every rule
+    _single_store) or 'serial' (anything else)."""
+    if groups is None:
+        groups = state_groups(ruleset)
+    conv: dict[int, bool] = {}
+    store: dict[int, bool] = {}
     for i, r in enumerate(ruleset.rules):
-        if not r.flexbits:
-            continue
-        node = ("r", i)
-        find(node)
-        for fb in r.flexbits:
-            union(node, ("f", fb.name))
-        if has_count:
-            union(node, ("f", "__all__"))
-    roots: dict = {}
-    out: dict[int, int] = {}
-    for i, r in enumerate(ruleset.rules):
-        if r.flexbits:
-            root = find(("r", i))
-            out[i] = roots.setdefault(root, len(roots))
-    return out
+        g = groups[i]
+        conv[g] = conv.get(g, True) and _conv_derived(r)
+        store[g] = store.get(g, True) and _single_store(r)
+    return {g: "conv" if conv[g] else "store" if store[g] else "serial"
+            for g in conv}
 
 
-# composite state-group key separator (general path, batch + streaming)
-GSEP = "\x1f"
+def flex_subkey_modes(ruleset: RuleSet,
+                      groups: dict[int, int]) -> dict[int, str]:
+    """cluster id → finest EXACT flexbit subkey, for clusters holding
+    flexbit rules:
 
-
-def single_key_per_row(ruleset: RuleSet) -> bool:
-    """True when every matched row carries exactly ONE state-group key —
-    the precondition of the composite-key general path (batch) and the
-    general streaming correlator.  Outside the conv fast path the
-    validator already rejects cross-clause rules, so the only multi-key
-    shape left is after + threshold with DIFFERENT track sets on one
-    rule (after_key != thresh_key row-wise → two keyed stages)."""
-    return not dual_track_rules(ruleset)
-
-
-def dual_track_rules(ruleset: RuleSet) -> list[int]:
-    """rule_idx of rules carrying after AND threshold with DIFFERENT
-    track sets — the one IP-keyed shape whose two state keys differ
-    row-wise (after.c:113-117 and threshold.c:118-121 each key by their
-    own track value).  The batch engine runs these through the staged
-    fallback (two keyed stages, each parallel over its track keyspace);
-    the composite key routes them to ONE group per sid ("d"<GSEP>sid in
-    general_group_key_col) — both stores are sid-scoped, so a per-sid
-    group co-locates every row either store can touch and the unified
-    fold reproduces engine order exactly.  Per-sid grouping serializes
-    the rule's rows through one partition/state group, which is the
-    price of single-pass semantics; streaming (which cannot chain two
-    stateful operators) takes it, batch prefers the staged stages."""
-    return [i for i, r in enumerate(ruleset.rules)
-            if r.after and r.threshold
-            and r.after.tracks != r.threshold.tracks]
-
-
-def flex_subkey_modes(ruleset: RuleSet) -> dict[int, str]:
-    """flexbit name-group id → finest EXACT partition subkey:
-
-      'src'   every reader (isset/isnotset/unset/count) in the group is
+      'src'   every reader (isset/isnotset/unset/count) in the cluster is
               src-sided (by_src/by_src_p, count by_src): an entry can
-              only be consulted by rows sharing its ip_src, so the group
-              shards by ip_src with bit-identical results
+              only be consulted by rows sharing its ip_src, so the
+              cluster shards by ip_src with bit-identical results
       'dst'   dst-sided mirror
       'pair'  only both/both_p readers → shard by (ip_src, ip_dst)
       'upair' both/reverse mix → shard by the unordered pair
       ''      anything else ('none', xbitdst cross-directions, mixed
-              sides) — the group stays one serial partition, which is
-              the reference's own global-scan semantic
+              sides) — the cluster stays one group, which is the
+              reference's own global-scan semantic
 
-    set-only groups (no readers) shard freely ('src')."""
-    groups = flexbit_groups(ruleset)
-    dirs: dict[int, set] = {g: set() for g in groups.values()}
+    set-only clusters (no readers) shard freely ('src')."""
+    dirs: dict[int, set] = {}
     for i, r in enumerate(ruleset.rules):
-        if i not in groups:
+        if not r.flexbits:
             continue
+        d = dirs.setdefault(groups[i], set())
         for fb in r.flexbits:
             if fb.action in ("isset", "isnotset", "unset"):
-                dirs[groups[i]].add(fb.direction)
+                d.add(fb.direction)
             elif fb.action == "count":
-                dirs[groups[i]].add("count_" + fb.direction)
+                d.add("count_" + fb.direction)
     out = {}
     for g, d in dirs.items():
         if d <= {"by_src", "by_src_p", "count_by_src"}:
@@ -272,105 +209,67 @@ def flex_subkey_modes(ruleset: RuleSet) -> dict[int, str]:
     return out
 
 
-def general_group_key_col(ruleset: RuleSet):
-    """Per-row composite state-group key (column expr):
+def state_key_cols(ruleset: RuleSet):
+    """The state-group key of every matched row, as ``(key, cluster)``
+    column expressions; batch partitions by both, streaming groups by
+    ``key`` alone.  Per cluster mode (cluster_modes):
 
-      x<GSEP>xbit_key           — xbit store keyed (name, track value);
-                                  set/isset interact iff their track
-                                  VALUES coincide (xbit-mmap.c:88-91
-                                  Xbit_Return_Tracking_Hash), which is
-                                  exactly key equality here
-      f<GSEP>name-group         — flexbit name-group (flexbit_groups);
-                                  a `count` clause couples all groups
-                                  into one, so name-agnostic tallies
-                                  stay single-group
-      d<GSEP>sid                — after + threshold with DIFFERENT
-                                  tracks on one rule (dual_track_rules):
-                                  the row carries TWO state keys, so the
-                                  group is the sid itself — both stores
-                                  are sid-scoped, making the per-sid
-                                  group the finest key that co-locates
-                                  all state either store can touch
-      a<GSEP>sid<GSEP>track-key — after/threshold state (after.c:113-117
-                                  / threshold.c:118-121 key by sid +
-                                  track value; one value per row for
-                                  every non-dual-track rule)
-
-    NULL for rows touching no store (stateless rules, or stateful rules
-    whose track value is missing — the staged path passes those through
-    with default flags, and so do callers of this key)."""
+      conv    conv_id (stateless rules are conv clusters too)
+      store   the row's one store key —
+                a<GSEP>sid<GSEP>track-value   after/threshold (sid-scoped,
+                                              after.c:113-117 /
+                                              threshold.c:118-121)
+                x<GSEP>xbit_key               xbit track value; set/isset
+                                              interact iff their values
+                                              coincide (xbit-mmap.c:88-91)
+                f<GSEP>cluster<GSEP>subkey    flexbit cluster, sharded by
+                                              flex_subkey_modes
+      serial  s<GSEP>cluster — the whole cluster is one group"""
     from pyspark.sql import functions as F
 
-    fgroups = flexbit_groups(ruleset)
-    expr = F.when(F.col("xbit_key").isNotNull(),
-                  F.concat_ws(GSEP, F.lit("x"), F.col("xbit_key")))
-    if fgroups:
-        gmap = F.create_map(*[F.lit(x) for i, g in fgroups.items()
-                              for x in (i, g)])
-        # direction-aware subkey (flex_subkey_modes): shards a name-group
-        # across its src/dst/pair keyspace when every reader is
-        # side-consistent — the difference between one serial partition
-        # per flexbit name and full parallelism at 10M turns
-        modes = flex_subkey_modes(ruleset)
-        smap = F.create_map(*[F.lit(x) for g, m in modes.items()
-                              for x in (g, m)])
-        grp = gmap[F.col("rule_idx")]
-        src = F.coalesce(F.col("ip_src"), F.lit(""))
-        dst = F.coalesce(F.col("ip_dst"), F.lit(""))
-        sub = (F.when(smap[grp] == "src", src)
-               .when(smap[grp] == "dst", dst)
-               .when(smap[grp] == "pair", F.concat_ws("~", src, dst))
-               .when(smap[grp] == "upair",
-                     F.concat_ws("~", F.least(src, dst),
-                                 F.greatest(src, dst)))
-               .otherwise(F.lit("")))
-        expr = expr.when(F.col("rule_idx").isin(list(fgroups)),
-                         F.concat_ws(GSEP, F.lit("f"), grp, sub))
-    dual = dual_track_rules(ruleset)
-    if dual:
-        # keyed by sid (not rule_idx): a sibling rule sharing a dual
-        # rule's sid shares its (sid,*)-keyed stores and must land in
-        # the same group
-        dual_sids = sorted({ruleset.rules[i].sid for i in dual})
-        expr = expr.when(
-            F.col("sid").isin(dual_sids) &
-            F.coalesce(F.col("after_key"), F.col("thresh_key")).isNotNull(),
-            F.concat_ws(GSEP, F.lit("d"), F.col("sid").cast("string")))
-    expr = expr.when(
-        F.coalesce(F.col("after_key"), F.col("thresh_key")).isNotNull(),
-        F.concat_ws(GSEP, F.lit("a"), F.col("sid").cast("string"),
-                    F.coalesce(F.col("after_key"), F.col("thresh_key"))))
-    return expr
-
-
-def validate_ruleset_for_spark(ruleset: RuleSet) -> None:
-    """Plan-time restrictions that apply ONLY outside the conv-keyed fast
-    path (where the unified fold handles every combination exactly)."""
-    if conv_keyed_only(ruleset):
-        return
-    for r in ruleset.rules:
-        if (r.xbits or r.flexbits) and (r.after or r.threshold):
-            raise ValueError(
-                f"sid {r.sid}: xbits/flexbits combined with after/threshold "
-                "on IP-extracted keys creates a cross-key state dependency "
-                "(engine.c:1132/1516/1560 one-pass semantics); only "
-                "conv-derived keys support this in distributed mode")
-        if r.xbits and r.flexbits:
-            # the staged path would apply each store's sets ignoring the
-            # OTHER store's gate on the same row; only the unified fold
-            # interleaves them in engine order
-            raise ValueError(
-                f"sid {r.sid}: xbits and flexbits in one rule need the "
-                "conv-keyed fast path (cross-store gate interleaving)")
-        if r.xbits and len({x.track for x in r.xbits}) > 1:
-            raise ValueError(
-                f"sid {r.sid}: multi-track xbits need the conv-keyed fast "
-                "path (per-xbit keys span partitions otherwise)")
+    groups = state_groups(ruleset)
+    modes = cluster_modes(ruleset, groups)
+    rid = F.col("rule_idx")
+    cluster = (F.create_map(*[F.lit(x) for i, g in groups.items()
+                              for x in (i, g)])[rid]
+               if len(modes) > 1 else F.lit(0))
+    cl = cluster.cast("string")
+    src = F.coalesce(F.col("ip_src"), F.lit(""))
+    dst = F.coalesce(F.col("ip_dst"), F.lit(""))
+    subkey = {"src": src, "dst": dst,
+              "pair": F.concat_ws("~", src, dst),
+              "upair": F.concat_ws("~", F.least(src, dst),
+                                   F.greatest(src, dst)),
+              "": F.lit("")}
+    fmodes = flex_subkey_modes(ruleset, groups)
+    branches: dict[str, tuple] = {}   # branch → (key expr, rule idxs)
+    for i, r in enumerate(ruleset.rules):
+        mode = modes[groups[i]]
+        if mode == "serial":
+            name, expr = "s", F.concat_ws(GSEP, F.lit("s"), cl)
+        elif mode == "conv":
+            continue
+        elif r.xbits:
+            name, expr = "x", F.concat_ws(GSEP, F.lit("x"), F.col("xbit_key"))
+        elif r.flexbits:
+            sub = fmodes[groups[i]]
+            name, expr = "f" + sub, F.concat_ws(GSEP, F.lit("f"), cl,
+                                                subkey[sub])
+        else:
+            name, expr = "a", F.concat_ws(
+                GSEP, F.lit("a"), F.col("sid").cast("string"),
+                F.coalesce(F.col("after_key"), F.col("thresh_key")))
+        branches.setdefault(name, (expr, []))[1].append(i)
+    key = None
+    for expr, idx in branches.values():
+        cond = rid.isin(idx)
+        key = F.when(cond, expr) if key is None else key.when(cond, expr)
+    conv = F.col("conv_id")
+    return (conv if key is None else key.otherwise(conv)), cluster
 
 
 # ---------------------------------------------------------------------------
-# per-key state machines (shared by the unified fold, the staged general
-# path, and the streaming correlator)
+# per-key state machines
 # ---------------------------------------------------------------------------
 
 def _after_update(spec, state: dict, key, t: int) -> bool:
@@ -447,7 +346,7 @@ def _xbit_apply(rule, store: dict, ip_src: str, ip_dst: str,
 
 
 # ---------------------------------------------------------------------------
-# the unified engine-order fold (conv-keyed fast path + streaming)
+# the unified engine-order fold (batch + streaming)
 # ---------------------------------------------------------------------------
 
 class CorrState:
@@ -528,284 +427,33 @@ def apply_fold_to_batches(fold, st: CorrState,
         yield pdf
 
 
-# ---------------------------------------------------------------------------
-# staged general path (IP-extracted keys)
-# ---------------------------------------------------------------------------
-
-def _after_fold(ruleset: RuleSet):
-    """Batch wrapper over _after_update for the keyed stage."""
-    def fold(pdf: pd.DataFrame, state: dict) -> list[bool]:
-        flags = []
-        for sid, rev, key, t, ridx in zip(
-                pdf["sid"].tolist(), pdf["rev"].tolist(),
-                pdf["after_key"].tolist(), pdf["epoch"].tolist(),
-                pdf["rule_idx"].tolist()):
-            if key is None:
-                flags.append(False)
-                continue
-            flags.append(_after_update(ruleset.rules[ridx].after, state,
-                                       (sid, rev, key), t))
-        return flags
-    return fold
-
-
-def _threshold_fold(ruleset: RuleSet):
-    def fold(pdf: pd.DataFrame, state: dict) -> list[bool]:
-        flags = []
-        for sid, key, t, ridx in zip(
-                pdf["sid"].tolist(), pdf["thresh_key"].tolist(),
-                pdf["epoch"].tolist(), pdf["rule_idx"].tolist()):
-            if key is None:
-                flags.append(False)
-                continue
-            flags.append(_thresh_update(ruleset.rules[ridx].threshold,
-                                        state, (sid, key), t))
-        return flags
-    return fold
-
-
-def _xbit_fold(ruleset: RuleSet):
-    """Keyed-stage xbit fold (single-track rules: the xbit_key column IS
-    the track value, so (name, key) addressing matches the store)."""
-    def fold(pdf: pd.DataFrame, state: dict) -> list[bool]:
-        flags = []
-        for key, t, ridx, src, dst in zip(
-                pdf["xbit_key"].tolist(), pdf["epoch"].tolist(),
-                pdf["rule_idx"].tolist(), pdf["ip_src"].tolist(),
-                pdf["ip_dst"].tolist()):
-            if key is None:
-                flags.append(True)
-                continue
-            rule = ruleset.rules[ridx]
-            passed = _xbit_condition(rule, state, src, dst, t)
-            if passed:
-                _xbit_apply(rule, state, src, dst, t)
-            flags.append(passed)
-        return flags
-    return fold
-
-
-def _flexbit_serial_fold(ruleset: RuleSet):
-    """Per-group flexbit fold for IP-extracted / 'none'-direction rules:
-    gates + sets, engine order, over one name-group's rows at a time.
-    after/threshold are rejected on these rules (validator), so the gate
-    alone decides and sets always fire on gate-pass (engine.c:1560)."""
-    def fold(pdf: pd.DataFrame, flex: FlexStore) -> list[bool]:
-        flags = []
-        for ridx, t, src, dst, sport, dport in zip(
-                pdf["rule_idx"].tolist(), pdf["epoch"].tolist(),
-                pdf["ip_src"].tolist(), pdf["ip_dst"].tolist(),
-                pdf["src_port"].tolist(), pdf["dst_port"].tolist()):
-            rule = ruleset.rules[ridx]
-            cond_ret = flex.condition(rule, src, dst, sport, dport, t)
-            count_ret = flex.count_check(rule, src, dst)
-            ok = flexbit_gate(rule, cond_ret, count_ret)
-            if ok:
-                flex.apply_sets(rule, src, dst, sport, dport, t)
-            flags.append(ok)
-        return flags
-    return fold
-
-
-def _run_stage(df, key_cols: list[str], fold_factory, flag_col: str,
-               ruleset: RuleSet):
-    """One stateful stage: shuffle by key (NULL keys salted by
-    (conv_id, sid) to avoid a degenerate partition), sort within
-    partitions, single mapInPandas pass with cross-batch state."""
-    from pyspark.sql import functions as F
-
-    key = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
-    part_expr = F.when(
-        F.col(key_cols[-1]).isNull(),
-        F.concat_ws("\x1f", F.lit("\x00null"), F.col("conv_id"),
-                    F.col("sid").cast("string"))).otherwise(key)
-    rep = (df.repartition(part_expr)
-             .sortWithinPartitions(*key_cols, *_SORT))
-    fold = fold_factory(ruleset)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict = {}
-        for pdf in batches:
-            pdf[flag_col] = pd.Series(fold(pdf, state), dtype=bool,
-                                      index=pdf.index)
-            yield pdf
-
-    return rep.mapInPandas(run, schema=CORR_SCHEMA)
-
-
-def run_correlate(matches, ruleset: RuleSet, persists: list | None = None):
+def run_correlate(matches, ruleset: RuleSet):
     """matches (MATCH_SCHEMA) → matches + suppression/gate flags
-    (CORR_SCHEMA).  Frames persisted internally are appended to
-    ``persists`` (when given) so the caller can unpersist exactly those —
-    never a blanket ``clearCache`` that would evict caller caches.
-
-    Fast path (all correlation keys conv-derived — the common transcript
-    case): ONE repartition(conv_id) + sortWithinPartitions + a single
-    mapInPandas running the unified engine-order fold.  One shuffle of
-    matched rows, one Arrow round-trip, no persists, every clause
-    combination supported.
-
-    General path (IP-extracted keys): one keyed stage per clause type —
-    the Arrow round-trip and shuffle are paid ONLY for rows carrying the
-    stage's key.  The matched frame and each folded output are persisted
-    MEMORY_AND_DISK so the filter/union branches are cache reads, never
-    matcher recomputes."""
-    from pyspark import StorageLevel
+    (CORR_SCHEMA): ONE repartition(key, cluster) + sortWithinPartitions +
+    a single mapInPandas running the unified engine-order fold over every
+    matched row.  One shuffle, one Arrow round-trip, every clause
+    combination exact; a partition-shared CorrState cannot alias across
+    keys because every store is keyed by row-level values and clusters
+    share no sid or name (state_key_cols)."""
     from pyspark.sql import functions as F
 
-    validate_ruleset_for_spark(ruleset)
     df = (matches
           .withColumn("suppress_after", F.lit(False))
           .withColumn("suppress_thresh", F.lit(False))
           .withColumn("xbit_pass", F.lit(True))
           .withColumn("flexbit_pass", F.lit(True)))
-
-    has_after = any(r.after for r in ruleset.rules)
-    has_thresh = any(r.threshold for r in ruleset.rules)
-    has_xbit = any(r.xbits for r in ruleset.rules)
-    has_flex = any(r.flexbits for r in ruleset.rules)
-    if not (has_after or has_thresh or has_xbit or has_flex):
+    if not any(r.after or r.threshold or r.xbits or r.flexbits
+               for r in ruleset.rules):
         return df
 
-    if conv_keyed_only(ruleset):
-        # hot-conversation salt: partition by (conv_id, state-group) —
-        # rules in different groups share no state (state_groups), so a
-        # hot conv's rows spread across #groups partitions exactly
-        groups = state_groups(ruleset)
-        n_groups = len(set(groups.values()))
-        if n_groups > 1:
-            gmap = F.create_map(*[F.lit(x) for i, g in groups.items()
-                                  for x in (i, g)])
-            df = df.withColumn("_sg", gmap[F.col("rule_idx")])
-            rep = (df.repartition(F.col("conv_id"), F.col("_sg"))
-                     .sortWithinPartitions("conv_id", "_sg", "epoch",
-                                           "turn_idx", "rule_idx")
-                     .drop("_sg"))
-        else:
-            rep = (df.repartition(F.col("conv_id"))
-                     .sortWithinPartitions("conv_id", "epoch", "turn_idx",
-                                           "rule_idx"))
-        fold = unified_fold(ruleset)
+    key, cluster = state_key_cols(ruleset)
+    rep = (df.withColumn("_key", key).withColumn("_cl", cluster)
+           .repartition("_key", "_cl")
+           .sortWithinPartitions("_key", "_cl", *_SORT)
+           .drop("_key", "_cl"))
+    fold = unified_fold(ruleset)
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            yield from apply_fold_to_batches(fold, CorrState(), batches)
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        yield from apply_fold_to_batches(fold, CorrState(), batches)
 
-        return rep.mapInPandas(run, schema=CORR_SCHEMA)
-
-    if single_key_per_row(ruleset):
-        # composite-key general path — the common IP-extracted shape.
-        # Every stateful row carries exactly one state-group key, so the
-        # plan collapses to the SAME shape as the conv fast path: one
-        # repartition(_gkey) + sortWithinPartitions + one unified-fold
-        # mapInPandas — instead of the staged path's per-clause shuffle +
-        # persist + filter/union chain (4 shuffles and 5 cached frames on
-        # a 4-clause ruleset; >3x the wall at 10M turns).  Correct
-        # because unified_fold keys every store by row-level values
-        # ((sid,rev,after_key), (sid,thresh_key), (name,track-value),
-        # flexbit (name,src,dst)): the shuffle only needs to CO-LOCATE
-        # rows of equal state keys, which _gkey does by construction,
-        # and a partition-shared CorrState cannot alias across groups
-        # (keys are globally unique; flexbit tallies are name-scoped and
-        # `count` coupling is already one group).  Stateless rows bypass
-        # the shuffle entirely.
-        gkey = general_group_key_col(ruleset)
-        keyed = df.withColumn("_gkey", gkey)
-        passthru = keyed.filter(F.col("_gkey").isNull()).drop("_gkey")
-        rep = (keyed.filter(F.col("_gkey").isNotNull())
-               .repartition(F.col("_gkey"))
-               .sortWithinPartitions("_gkey", *_SORT))
-        fold = unified_fold(ruleset)
-
-        def run_gen(batches: Iterator[pd.DataFrame]
-                    ) -> Iterator[pd.DataFrame]:
-            def stripped():
-                for pdf in batches:
-                    yield pdf.drop(columns=["_gkey"])
-            yield from apply_fold_to_batches(fold, CorrState(), stripped())
-
-        return (rep.mapInPandas(run_gen, schema=CORR_SCHEMA)
-                .unionByName(passthru))
-
-    # staged fallback: after + threshold with different tracks on one
-    # rule needs two keyed stages (one shuffle per clause type)
-
-    def _track(frame):
-        if persists is not None:
-            persists.append(frame)
-        return frame
-
-    df = _track(df.persist(StorageLevel.MEMORY_AND_DISK))
-
-    # xbit/flexbit gates evaluate BEFORE after/threshold in the engine
-    # (engine.c:1132-1151 vs 1516); with cross-clause rules rejected by
-    # the validator the stages are independent, so stage order here only
-    # fixes the flag columns, not semantics.
-    if has_xbit:
-        keyed = df.filter(F.col("xbit_key").isNotNull())
-        folded = _track(_run_stage(keyed, ["xbit_key"], _xbit_fold,
-                                   "xbit_pass", ruleset)
-                        .persist(StorageLevel.MEMORY_AND_DISK))
-        df = df.filter(F.col("xbit_key").isNull()).unionByName(folded)
-
-    if has_flex:
-        import numpy as np
-
-        fgroups = flexbit_groups(ruleset)
-        # membership by rule_idx (the same key _fg maps), NOT sid: a sid
-        # shared between a flexbit and a non-flexbit rule would pass a
-        # sid filter with a null _fg and crash run_flex's int(g)
-        flex_idx = list(fgroups)
-        # partition the flexbit fold by name-group (flexbit_groups): state
-        # never crosses a flexbit name, so each group folds independently —
-        # serial work is bounded by the largest coupled group (ONLY a
-        # `count` clause couples globally), not the whole flexbit row set
-        gmap = F.create_map(*[F.lit(x) for i, g in fgroups.items()
-                              for x in (i, g)])
-        keyed = (df.filter(F.col("rule_idx").isin(flex_idx))
-                   .withColumn("_fg", gmap[F.col("rule_idx")])
-                   .repartition(F.col("_fg"))
-                   .sortWithinPartitions("_fg", *_SORT))
-        fold = _flexbit_serial_fold(ruleset)
-
-        def run_flex(batches: Iterator[pd.DataFrame]
-                     ) -> Iterator[pd.DataFrame]:
-            # one FlexStore per group: hash-partitioning may co-locate
-            # several groups, and Arrow may split a group across batches
-            stores: dict[int, FlexStore] = {}
-            for pdf in batches:
-                fg = pdf["_fg"].to_numpy()
-                pdf = pdf.drop(columns=["_fg"])
-                flags = np.empty(len(pdf), dtype=bool)
-                for g in pd.unique(fg):
-                    idx = np.nonzero(fg == g)[0]
-                    store = stores.setdefault(int(g), FlexStore())
-                    flags[idx] = fold(pdf.iloc[idx], store)
-                pdf["flexbit_pass"] = pd.Series(flags, dtype=bool,
-                                                index=pdf.index)
-                yield pdf
-
-        folded = _track(keyed.mapInPandas(run_flex, schema=CORR_SCHEMA)
-                        .persist(StorageLevel.MEMORY_AND_DISK))
-        df = df.filter(~F.col("rule_idx").isin(flex_idx)).unionByName(folded)
-
-    if has_after:
-        keyed = df.filter(F.col("after_key").isNotNull())
-        folded = _track(_run_stage(keyed, ["sid", "rev", "after_key"],
-                                   _after_fold, "suppress_after", ruleset)
-                        .persist(StorageLevel.MEMORY_AND_DISK))
-        df = df.filter(F.col("after_key").isNull()).unionByName(folded)
-
-    # threshold: after-suppressed rows never reach the threshold counter
-    # (engine.c:1528: Threshold2 called only when after_log_flag == false)
-    if has_thresh:
-        keyed = df.filter(F.col("thresh_key").isNotNull() &
-                          ~F.col("suppress_after"))
-        rest = df.filter(F.col("thresh_key").isNull() |
-                         F.col("suppress_after"))
-        folded = _track(_run_stage(keyed, ["sid", "thresh_key"],
-                                   _threshold_fold, "suppress_thresh",
-                                   ruleset)
-                        .persist(StorageLevel.MEMORY_AND_DISK))
-        df = rest.unionByName(folded)
-
-    return df
+    return rep.mapInPandas(run, schema=CORR_SCHEMA)

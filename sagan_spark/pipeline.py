@@ -72,10 +72,8 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     matches = run_match(kept, ruleset)
     # every sink + the counters consume `correlated`; persist so the four
     # sink actions share one computation of the match/correlate stages
-    persisted: list = []
-    correlated = run_correlate(matches, ruleset, persists=persisted) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    persisted.append(correlated)
+    correlated = run_correlate(matches, ruleset).persist(
+        StorageLevel.MEMORY_AND_DISK)
     alerts = enrich_alerts(alert_sink(correlated, ruleset), spark, ruleset)
     alerts = attach_references(alerts, spark, ruleset)   # J2
     alerts = attach_gen_msg(alerts, spark, ruleset)      # J3
@@ -93,7 +91,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                              ignore_condition(ruleset.ignore_list), ruleset),
         malformed=malformed_counts(parsed),
         correlated=correlated,
-        persisted=persisted,
+        persisted=[correlated],
     )
 
 

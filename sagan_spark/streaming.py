@@ -5,16 +5,16 @@ named pipe, /root/reference/src/sagan.c:1142-1345) re-expressed as:
     readStream (file source over the transcripts directory)
       → PARSE / IGNORE     (same narrow codegen expressions as batch)
       → MATCH              (same stateless vectorized mapInPandas matcher)
-      → CORRELATE          (applyInPandasWithState keyed by conv_id — the
-                            streaming analog of the batch conv-partition
-                            fold; state = the after/threshold/xbit dicts,
-                            JSON-encoded in the GroupState.  Store ENTRIES
-                            evict by EVENT time (_make_pruner — the
-                            Clean_IPC_Object analog, src/ipc.c:79-200);
-                            the processing-time timeout only GCs whole
-                            groups, so a stalled or backfilled source
-                            cannot lose event-time-live entries unless the
-                            conv itself goes wall-clock silent)
+      → CORRELATE          (applyInPandasWithState keyed by the batch
+                            engine's state-group key; state = the four
+                            stores, JSON-encoded in the GroupState.  Store
+                            ENTRIES evict by EVENT time (_make_pruner —
+                            the Clean_IPC_Object analog,
+                            src/ipc.c:79-200); the processing-time timeout
+                            only GCs whole groups, so a stalled or
+                            backfilled source cannot lose event-time-live
+                            entries unless the group itself goes
+                            wall-clock silent)
       → ROUTE              (foreachBatch fan-out to the same sinks)
 
 Watermark note: the reference has NO event-time semantics — correlation
@@ -25,19 +25,12 @@ arrival-order semantics per micro-batch by sorting each group's rows on
 sequence reproduces the batch result (tested in
 tests/test_streaming.py).
 
-Key routing mirrors the batch engine's two paths:
-
-* conv-derived keys (fast path) → one applyInPandasWithState keyed by
-  conv_id running the unified engine-order fold;
-* IP-extracted keys (the reference's primary deployment mode) → the
-  STAGED-GENERAL streaming path: outside the fast path the validator
-  rejects cross-clause rules, so every matched row carries a single
-  composite state key ("x"+xbit_key, "f"+flexbit name-group,
-  "a"+sid+track-value, or — for after+threshold with DIFFERENT tracks
-  on one rule, whose two stores are both sid-scoped — "d"+sid); one
-  applyInPandasWithState keyed by that composite dispatches the per-kind
-  fold — the streaming analog of the batch path's per-stage _run_stage
-  shuffles.  Stateless rows bypass state entirely (filter + union).
+Key routing is the batch engine's: correlate.state_key_cols plans one
+state-group key per matched row (conv_id for conv-derived clusters, the
+row's store key where every row touches one store, one group per cluster
+otherwise), and ONE applyInPandasWithState grouped by that key runs the
+same unified engine-order fold as batch.  Batch and streaming therefore
+cannot diverge on which rows share state.
 
 Event-time bound (the one the pruner assumes): store eviction is exact
 while event-time disorder stays within ONE horizon (the largest rule
@@ -61,10 +54,8 @@ from .correlate import (
     FlexStore,
     _SORT,
     apply_fold_to_batches,
-    conv_keyed_only,
-    general_group_key_col,
+    state_key_cols,
     unified_fold,
-    validate_ruleset_for_spark,
 )
 from .datagen import TRANSCRIPTS_SCHEMA
 from .match import MATCH_SCHEMA, build_matcher, candidate_filter
@@ -150,71 +141,17 @@ def _make_pruner(ruleset: RuleSet):
     return prune
 
 
-def _stateful_correlator(ruleset: RuleSet, timeout_ms: int = 0,
-                         late_rows=None):
-    """applyInPandasWithState function: per group (conv_id, or the single
-    global group for 'none'-flexbit rulesets), fold the micro-batch's
-    rows (sorted deterministically) through the same unified engine-order
-    fold as batch, persisting the stores in the GroupState across
-    micro-batches.  Store entries are evicted by EVENT time via
-    _make_pruner on every invocation, anchored to the max epoch the group
-    has EVER seen (persisted in the state blob) — rows older than one
-    horizon behind that anchor may consult already-pruned entries and are
-    tallied into the ``late_rows`` accumulator."""
-    fold = unified_fold(ruleset)
-    prune = _make_pruner(ruleset)
-    horizon = default_state_timeout_ms(ruleset) // 2000
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st, max_epoch = (_decode_state(state.get[0]) if state.exists
-                         else (CorrState(), 0))
-
-        def batches():
-            nonlocal max_epoch
-            for pdf in pdfs:
-                if "_grp" in pdf.columns:
-                    pdf = pdf.drop(columns=["_grp"])
-                if len(pdf):
-                    if late_rows is not None and max_epoch:
-                        late = int((pdf["epoch"] <
-                                    max_epoch - horizon).sum())
-                        if late:
-                            late_rows.add(late)
-                    max_epoch = max(max_epoch, int(pdf["epoch"].max()))
-                yield (pdf.sort_values(["epoch", "conv_id", "turn_idx",
-                                        "rule_idx"])
-                       .reset_index(drop=True))
-
-        yield from apply_fold_to_batches(fold, st, batches())
-        if max_epoch:
-            prune(st, max_epoch)
-        state.update((_encode_state(st, max_epoch),))
-        if timeout_ms:
-            state.setTimeoutDuration(timeout_ms)
-
-    return fn
-
-
-# ---------------------------------------------------------------------------
-# staged-general streaming path (IP-extracted keys, SURVEY §2.9 on the
-# reference's primary deployment mode).  Group key + precondition are
-# SHARED with the batch composite-key path (correlate.general_group_key_col
-# / dual_track_rules), and the fold is the same unified engine-order
-# fold — batch and streaming cannot diverge on general-path semantics.
-# ---------------------------------------------------------------------------
-
-
-def _general_stateful_correlator(ruleset: RuleSet, timeout_ms: int = 0,
-                                 late_rows=None):
-    """applyInPandasWithState function for composite state-group keys.
-    One micro-batch's group rows are concatenated and sorted ONCE (a
-    group is one state key — one IP / one name-group — so the per-batch
-    row set is small and the global sort keeps cross-chunk order exact),
-    then folded through unified_fold with the stores persisted in the
-    GroupState."""
+def _group_correlator(ruleset: RuleSet, timeout_ms: int = 0,
+                      late_rows=None):
+    """applyInPandasWithState function, one call per state group and
+    micro-batch: the group's rows are concatenated and sorted ONCE (the
+    global sort keeps cross-chunk order exact), then folded through the
+    same unified engine-order fold as batch, with the stores persisted in
+    the GroupState across micro-batches.  Store entries are evicted by
+    EVENT time via _make_pruner on every invocation, anchored to the max
+    epoch the group has EVER seen (persisted in the state blob) — rows
+    older than one horizon behind that anchor may consult already-pruned
+    entries and are tallied into the ``late_rows`` accumulator."""
     fold = unified_fold(ruleset)
     prune = _make_pruner(ruleset)
     horizon = default_state_timeout_ms(ruleset) // 2000
@@ -228,19 +165,14 @@ def _general_stateful_correlator(ruleset: RuleSet, timeout_ms: int = 0,
         chunks = [c for c in pdfs if len(c)]
         if chunks:
             pdf = (pd.concat(chunks, ignore_index=True)
-                   .drop(columns=["_gkey"])
+                   .drop(columns=["_key"])
                    .sort_values(_SORT).reset_index(drop=True))
             if late_rows is not None and max_epoch:
                 late = int((pdf["epoch"] < max_epoch - horizon).sum())
                 if late:
                     late_rows.add(late)
             max_epoch = max(max_epoch, int(pdf["epoch"].max()))
-            sup_a, sup_t, xp, fp = fold(pdf, st)
-            pdf["suppress_after"] = pd.Series(sup_a, dtype=bool)
-            pdf["suppress_thresh"] = pd.Series(sup_t, dtype=bool)
-            pdf["xbit_pass"] = pd.Series(xp, dtype=bool)
-            pdf["flexbit_pass"] = pd.Series(fp, dtype=bool)
-            yield pdf
+            yield from apply_fold_to_batches(fold, st, [pdf])
         if max_epoch:
             prune(st, max_epoch)
         state.update((_encode_state(st, max_epoch),))
@@ -277,24 +209,6 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
     pruned state.  Pass ``spark.sparkContext.accumulator(0)``."""
     from pyspark.sql import functions as F
 
-    validate_ruleset_for_spark(ruleset)
-    # grouping: per-conv state groups on the fast path; rulesets whose
-    # ONLY cross-conv state is 'none'-direction flexbit sharing
-    # (flexbit-mmap.c:124 matches any src/dst) route through a single
-    # global group; IP-extracted keys take the staged-general composite
-    # key (one state group per row; dual-track rules get a per-sid group)
-    if conv_keyed_only(ruleset):
-        group_col = None
-    elif conv_keyed_only(ruleset, ignore_none_flexbits=True):
-        group_col = "_grp"
-    else:
-        # after+threshold with DIFFERENT tracks on one rule (the batch
-        # staged-fallback shape) also streams: general_group_key_col
-        # routes those rules' rows to one "d"+sid group — both stores
-        # are sid-scoped, so a per-sid group co-locates all state either
-        # can touch, at the cost of serializing that rule's rows through
-        # one state group (streaming cannot chain two stateful stages)
-        group_col = "_gkey"
     if state_timeout_ms is None:
         state_timeout_ms = default_state_timeout_ms(ruleset)
     parsed = parse_transcripts(transcripts_stream)
@@ -315,36 +229,16 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
             .withColumn("flexbit_pass", F.lit(True)))
     if not stateful:
         return base
-    timeout = ("ProcessingTimeTimeout" if state_timeout_ms
-               else "NoTimeout")
-    if group_col == "_gkey":
-        keyed = base.withColumn(group_col,
-                                general_group_key_col(ruleset))
-        # stateless rows (no live state key) bypass the store entirely —
-        # the streaming analog of the batch path's filter/union branches
-        passthru = (keyed.filter(F.col(group_col).isNull())
-                    .drop(group_col))
-        folded = (keyed.filter(F.col(group_col).isNotNull())
-                  .groupBy(group_col)
-                  .applyInPandasWithState(
-                      _general_stateful_correlator(
-                          ruleset, state_timeout_ms, late_rows),
-                      outputStructType=CORR_SCHEMA,
-                      stateStructType=STATE_SCHEMA,
-                      outputMode="append",
-                      timeoutConf=timeout))
-        return folded.unionByName(passthru)
-    if group_col is None:
-        grouped = base.groupBy("conv_id")
-    else:
-        grouped = (base.withColumn(group_col, F.lit("__global__"))
-                   .groupBy(group_col))
-    return grouped.applyInPandasWithState(
-        _stateful_correlator(ruleset, state_timeout_ms, late_rows),
-        outputStructType=CORR_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout)
+    key, _ = state_key_cols(ruleset)
+    return (base.withColumn("_key", key)
+            .groupBy("_key")
+            .applyInPandasWithState(
+                _group_correlator(ruleset, state_timeout_ms, late_rows),
+                outputStructType=CORR_SCHEMA,
+                stateStructType=STATE_SCHEMA,
+                outputMode="append",
+                timeoutConf=("ProcessingTimeTimeout" if state_timeout_ms
+                             else "NoTimeout")))
 
 
 def run_stream_to_parquet(spark, in_path: str, out_path: str,

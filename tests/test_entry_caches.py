@@ -1,7 +1,8 @@
 """Persist lifecycle of the driver-entry memoization caches: repeated
 driver queries in one session must not accumulate cached frames (the
-round-3 leak — _ip_correlated_df called run_correlate with persists=None,
-so the general path's MEMORY_AND_DISK stage frames were never released).
+round-3 leak left correlate-internal MEMORY_AND_DISK frames behind; the
+single correlate plan persists nothing itself, so every persisted frame
+belongs to a cache that clear_entry_caches releases).
 
 The assertion is a DELTA check (no persisted RDDs beyond those present
 before the queries ran) so the test is robust to other session tests
@@ -28,8 +29,9 @@ def _persisted_ids(spark) -> set[int]:
 def test_entry_queries_release_all_persists(spark):
     before = _persisted_ids(spark)
     qs = entry.queries()
-    # one conv-keyed pipeline consumer + two IP-keyed general-path
-    # consumers (the round-3 leak path); counts force materialization
+    # one conv-keyed pipeline consumer, two consumers of the memoized
+    # IP-keyed frame and the un-memoized dual-track query; counts force
+    # materialization
     for name in ("pipeline_alerts", "correlate_after_ip",
                  "correlate_xbit_pair", "correlate_dual_ip"):
         qs[name](spark, SF).count()

@@ -1,10 +1,11 @@
 """ENFORCED oracle coverage for the driver-gate TAIL (round-4 advice):
-the driver's hard correctness gate records only the first 50 ``queries()``
-entries, so the 7 rotated past the window would otherwise be covered only
-by the best-effort tools/check_oracle.py runs.  This test runs exactly
-those tail queries through the same Spark-vs-DuckDB compare (same canon
-hash as the tool) on every pytest run, so a regression in a tail query
-fails CI even while it sits outside the driver window.
+the hard correctness gate records only the first ``GATE_WINDOW``
+``queries()`` entries, so the len(queries()) - GATE_WINDOW rotated past
+the window would otherwise be covered only by the best-effort
+tools/check_oracle.py runs.  This test runs exactly those tail queries
+through the same Spark-vs-DuckDB compare (same canon hash as the tool)
+on every pytest run, so a regression in a tail query fails CI even
+while it sits outside the gate window.
 
 The tail is read from the registry, not hard-coded — rotating the tail
 set between rounds automatically rotates the enforcement."""
@@ -22,9 +23,8 @@ import __spark_entry__ as entry  # noqa: E402
 from tools.check_oracle import canon  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
-GATE_WINDOW = 50
 
-_TAIL = list(entry.queries())[GATE_WINDOW:]
+_TAIL = list(entry.queries())[entry.GATE_WINDOW:]
 
 
 @pytest.fixture(scope="module")

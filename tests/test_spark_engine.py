@@ -267,12 +267,12 @@ def test_after_ports_only_track_general_path(spark):
     """after track by_srcport&by_dstport (no conv component) must NOT take
     the conv-partitioned path — the key is global across conversations
     (ADVICE item: conv partitioning would fragment one shared counter)."""
-    from sagan_spark.correlate import conv_keyed_only
+    from sagan_spark.correlate import cluster_modes
     rules = compile_ruleset(
         'alert syslog any any -> any any (msg:"m"; '
         'content:"connection from"; parse_src_ip: 1; '
         'after: track by_srcport&by_dstport, count 1, seconds 300; sid:1;)')
-    assert not conv_keyed_only(rules)
+    assert cluster_modes(rules) == {0: "store"}
     rows = _rows_from({
         "a": [(0, "connection from 1.1.1.1:99", 0),
               (1, "connection from 1.1.1.1:77", 2)],
@@ -287,11 +287,11 @@ def test_ports_only_track_fallback_rejects_conv_path(spark):
     """Same advice item, fallback addressing: by_username-only track on a
     rule without extraction yields one global key — must leave the
     conv-keyed fast path rather than fragment the counter."""
-    from sagan_spark.correlate import conv_keyed_only
+    from sagan_spark.correlate import cluster_modes
     rules = compile_ruleset(
         'alert syslog any any -> any any (msg:"m"; content:"probe"; '
         'after: track by_username, count 2, seconds 300; sid:1;)')
-    assert not conv_keyed_only(rules)
+    assert cluster_modes(rules) == {0: "store"}
     rows = _rows_from({
         "a": [(0, "probe", 0), (1, "probe", 2)],
         "b": [(0, "probe", 1), (1, "probe", 3)],
@@ -429,8 +429,9 @@ def test_write_sink_bucketed_layout(spark, tmp_path):
 
 def test_state_groups_partitioning():
     """Union-find groups: xbit/flexbit name sharing couples rules; a
-    flexbit count couples all flexbit rules; after/threshold rules stay
-    independent (sid-keyed state, after.c:113-117)."""
+    shared sid couples after/threshold rules (sid-keyed state,
+    after.c:113-117, threshold.c:118-121); rules sharing neither stay
+    independent."""
     from sagan_spark.correlate import state_groups
     rs = compile_ruleset("\n".join([
         'alert syslog any any -> any any (msg:"a"; content:"a"; '
@@ -443,10 +444,17 @@ def test_state_groups_partitioning():
         'xbits: isset,n1,track ip_src; sid:4;)',
         'alert syslog any any -> any any (msg:"e"; content:"e"; '
         'xbits: set,n2,track ip_src,expire 60; sid:5;)',
+        'alert syslog any any -> any any (msg:"f"; content:"f"; '
+        'threshold: type limit, track by_dst, count 1, seconds 60; '
+        'sid:2; rev:2;)',
+        'alert syslog any any -> any any (msg:"g"; content:"g"; '
+        'xbits: set,n3,track ip_src,expire 60; sid:5; rev:2;)',
     ]))
     g = state_groups(rs)
     assert g[2] == g[3]                    # shared xbit name n1
-    assert len({g[0], g[1], g[2], g[4]}) == 4   # otherwise independent
+    assert g[1] == g[5]                    # shared threshold sid 2
+    assert g[6] != g[4]                    # sid alone joins no xbit rules
+    assert len({g[0], g[1], g[2], g[4], g[6]}) == 5   # otherwise independent
 
 
 def test_hot_conv_group_salting_exact(spark):
@@ -472,10 +480,33 @@ def test_hot_conv_group_salting_exact(spark):
     assert_counters_equal(o, res)
 
 
+def test_duplicate_sid_threshold_shared_on_conv_path(spark):
+    """Two revisions of one sid share ONE threshold store keyed by
+    (sid, track) (threshold.c:118-121) even though they match different
+    content: the conv-keyed cluster salt must not split them into two
+    state groups.  Interleaved hits beta@0, alpha@5, beta@20, alpha@25
+    in one window: count 1 lets only the first hit through."""
+    rules = compile_ruleset("\n".join([
+        'alert syslog any any -> any any (msg:"r1"; content:"alpha"; '
+        'threshold: type limit, track by_src, count 1, seconds 10; '
+        'sid:7; rev:1;)',
+        'alert syslog any any -> any any (msg:"r2"; content:"beta"; '
+        'threshold: type limit, track by_src, count 1, seconds 10; '
+        'sid:7; rev:2;)',
+    ]))
+    rows = _rows_from({"c1": [(0, "beta", 0), (1, "alpha", 5),
+                              (2, "beta", 20), (3, "alpha", 25)]})
+    o, res = run_both(spark, rows, rules)
+    assert o["counters"]["alert_total"] == 2
+    assert_alerts_equal(o, res)
+    assert_counters_equal(o, res)
+
+
 def test_flexbit_name_groups():
-    """flexbit_groups: independent names → independent groups; a shared
-    name unions; one `count` clause couples ALL flexbit rules."""
-    from sagan_spark.correlate import flexbit_groups
+    """state_groups over flexbits: independent names → independent
+    groups; a shared name unions; one `count` clause couples ALL flexbit
+    rules."""
+    from sagan_spark.correlate import state_groups
     rs = compile_ruleset("\n".join([
         'alert syslog any any -> any any (msg:"a"; content:"a"; '
         'parse_src_ip: 1; flexbits: set,n1,500; sid:1;)',
@@ -484,7 +515,7 @@ def test_flexbit_name_groups():
         'alert syslog any any -> any any (msg:"c"; content:"c"; '
         'parse_src_ip: 1; flexbits: set,n2,500; sid:3;)',
     ]))
-    g = flexbit_groups(rs)
+    g = state_groups(rs)
     assert g[0] == g[1] and g[0] != g[2]
     rs2 = compile_ruleset("\n".join([
         'alert syslog any any -> any any (msg:"a"; content:"a"; '
@@ -493,15 +524,16 @@ def test_flexbit_name_groups():
         'parse_src_ip: 1; flexbits: set,n2,500; '
         'flexbits: count,by_src,gt 0; sid:2;)',
     ]))
-    g2 = flexbit_groups(rs2)
+    g2 = state_groups(rs2)
     assert len(set(g2.values())) == 1      # count couples everything
 
 
 def test_flexbit_general_path_parallel_groups(spark):
-    """Two unrelated flexbit names on the IP-keyed general path: the
-    fold shuffles by name-group (no Exchange SinglePartition in the
-    plan — the round-2 repartition(1) stage is gone) and stays
-    golden-equal to the oracle."""
+    """Two unrelated flexbit names on IP-extracted keys: the fold
+    shuffles by flexbit cluster and src (no Exchange SinglePartition in
+    the plan — the round-2 repartition(1) stage is gone), the matcher
+    runs once (one Exchange, no filter/union branches) and the result
+    stays golden-equal to the oracle."""
     rules = compile_ruleset("\n".join([
         'alert syslog any any -> any any (msg:"s1"; content:"alpha set"; '
         'parse_src_ip: 1; flexbits: set,n1,500; sid:1;)',
@@ -512,9 +544,10 @@ def test_flexbit_general_path_parallel_groups(spark):
         'alert syslog any any -> any any (msg:"c2"; content:"beta chk"; '
         'parse_src_ip: 1; flexbits: isset,by_src,n2; sid:4;)',
     ]))
-    from sagan_spark.correlate import conv_keyed_only, flexbit_groups
-    assert not conv_keyed_only(rules)
-    assert len(set(flexbit_groups(rules).values())) == 2
+    from sagan_spark.correlate import cluster_modes, run_correlate
+    from sagan_spark.match import run_match
+    from sagan_spark.parse import parse_transcripts
+    assert cluster_modes(rules) == {0: "store", 1: "store"}
     rows = _rows_from({
         "c1": [(0, "alpha set 10.0.0.1", 0), (1, "alpha chk 10.0.0.1", 10),
                (2, "beta chk 10.0.0.1", 20), (3, "beta set 10.0.0.2", 30),
@@ -523,8 +556,14 @@ def test_flexbit_general_path_parallel_groups(spark):
                (2, "beta chk 10.0.0.1", 35), (3, "alpha chk 10.0.0.1", 600)],
     })
     o, res = run_both(spark, rows, rules)
-    plan = res.correlated._jdf.queryExecution().executedPlan().toString()
+    corr = run_correlate(
+        run_match(parse_transcripts(spark_df_from_rows(spark, rows)), rules),
+        rules)
+    plan = corr._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
+    assert "Union" not in plan
+    # the matcher and the fold: one MapInPandas each
+    assert plan.count("MapInPandas") == 2
     assert_alerts_equal(o, res)
     assert_counters_equal(o, res)
 
@@ -598,37 +637,80 @@ def test_checkpoint_resume(spark, tmp_path, monkeypatch):
     _pd.testing.assert_frame_equal(_read(out_full), _read(out_ck))
 
 
-def test_general_composite_equals_staged(spark, monkeypatch):
-    """The composite-key general path (one shuffle + unified fold) and
-    the staged per-clause fallback (one shuffle per clause type) are two
-    physical plans for the SAME semantics; pin them bit-equal on the
-    ipkeys corpus so the fallback can't rot now that single-key rulesets
-    default to the composite plan."""
+def test_ipkeys_corpus_equals_oracle(spark):
+    """The IP-keyed entry corpus (after, threshold, ip_pair xbits and
+    by_src flexbits on parse_src_ip keys, each its own store cluster)
+    through the single correlate plan is golden-equal to the oracle, and
+    the corpus really exercises state."""
     import os
-
-    import sagan_spark.correlate as C
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
 
     rs = compile_ruleset_from_dir(
         os.path.join(os.path.dirname(__file__), "..", "rules-entry",
                      "ipkeys"))
-    assert C.single_key_per_row(rs) and not C.conv_keyed_only(rs)
     rows = gen_rows(16)
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    matches = run_match(parse_transcripts(df), rs)
-
-    cols = ["conv_id", "turn_idx", "sid", "suppress_after",
-            "suppress_thresh", "xbit_pass", "flexbit_pass"]
-
-    def result():
-        return (C.run_correlate(matches, rs).select(*cols).toPandas()
-                .sort_values(cols).reset_index(drop=True))
-
-    composite = result()
-    monkeypatch.setattr(C, "single_key_per_row", lambda _: False)
-    staged = result()
+    o, res = run_both(spark, rows, rs)
+    corr = res.correlated.toPandas()
     # both pass outcomes occur, or the corpus isn't exercising state
-    assert composite["suppress_after"].any()
-    assert set(composite["xbit_pass"].unique()) == {True, False}
-    pd.testing.assert_frame_equal(composite, staged)
+    assert corr["suppress_after"].any()
+    assert set(corr["xbit_pass"].unique()) == {True, False}
+    assert_alerts_equal(o, res)
+    assert_counters_equal(o, res)
+
+
+_CROSS_STORE = {
+    "xbits+after": [
+        'alert syslog any any -> any any (msg:"s"; content:"stage1"; '
+        'parse_src_ip: 1; xbits: set,xa,track ip_src,expire 300; sid:1;)',
+        'alert syslog any any -> any any (msg:"c"; content:"stage2"; '
+        'parse_src_ip: 1; xbits: isset,xa,track ip_src; '
+        'after: track by_src, count 1, seconds 300; sid:2;)'],
+    "flexbits+threshold": [
+        'alert syslog any any -> any any (msg:"s"; content:"stage1"; '
+        'parse_src_ip: 1; flexbits: set,fa,300; sid:1;)',
+        'alert syslog any any -> any any (msg:"c"; content:"stage2"; '
+        'parse_src_ip: 1; flexbits: isset,by_src,fa; '
+        'threshold: type limit, track by_src, count 1, seconds 300; '
+        'sid:2;)'],
+    "xbits+flexbits": [
+        'alert syslog any any -> any any (msg:"s"; content:"stage1"; '
+        'parse_src_ip: 1; xbits: set,xb,track ip_src,expire 300; sid:1;)',
+        'alert syslog any any -> any any (msg:"c"; content:"stage2"; '
+        'parse_src_ip: 1; xbits: isset,xb,track ip_src; '
+        'flexbits: isnotset,by_src,fb; flexbits: set,fb,40; sid:2;)'],
+    "multi-track xbits": [
+        'alert syslog any any -> any any (msg:"s"; content:"stage1"; '
+        'parse_src_ip: 1; xbits: set,ms,track ip_src,expire 300; sid:1;)',
+        'alert syslog any any -> any any (msg:"p"; content:"stage2"; '
+        'parse_src_ip: 1; xbits: set,mp,track ip_pair,expire 300; sid:2;)',
+        'alert syslog any any -> any any (msg:"c"; content:"check"; '
+        'parse_src_ip: 1; xbits: isset,ms,track ip_src; '
+        'xbits: isset,mp,track ip_pair; sid:3;)'],
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_CROSS_STORE))
+def test_cross_store_ip_keyed_equals_oracle(spark, shape):
+    """Rule shapes whose rows touch several stores on parse_src_ip keys
+    fold as one serial group per cluster and match the oracle exactly."""
+    from sagan_spark.correlate import cluster_modes
+    rules = compile_ruleset("\n".join(_CROSS_STORE[shape]))
+    assert "serial" in cluster_modes(rules).values()
+    ips = ["10.0.0.1", "10.0.0.2", "10.0.0.1", "10.0.0.3"]
+    seqs = {}
+    for c in range(4):
+        ip = ips[c]
+        seqs[f"c{c}"] = [
+            (0, f"stage2 from {ip}", 100 * c),
+            (1, f"check from {ip}", 100 * c + 5),
+            (2, f"stage1 from {ip}", 100 * c + 10),
+            (3, f"stage2 from {ip}", 100 * c + 20),
+            (4, f"stage2 from {ip}", 100 * c + 30),
+            (5, f"check from {ip}", 100 * c + 40),
+            (6, f"stage2 from {ip}", 100 * c + 90),
+            (7, f"check from {ip}", 100 * c + 95)]
+    o, res = run_both(spark, _rows_from(seqs), rules)
+    corr = res.correlated.toPandas()
+    assert not (corr["xbit_pass"] & corr["flexbit_pass"]).all()   # gated
+    assert o["counters"]["alert_total"] > 0
+    assert_alerts_equal(o, res)
+    assert_counters_equal(o, res)

@@ -100,8 +100,8 @@ def test_stream_equals_batch_across_microbatches(spark, ruleset, tmp_path):
 def test_stream_ipkeys_equal_batch(spark, tmp_path):
     """IP-extracted correlation keys — the reference's PRIMARY deployment
     mode (after.c:108-110 hashes extracted addresses) — stream through
-    the staged-general composite-key correlator and reproduce the batch
-    general path exactly, state carried across micro-batches."""
+    the store-keyed state groups and reproduce the batch plan exactly,
+    state carried across micro-batches."""
     rs = compile_ruleset_from_dir(
         os.path.join(os.path.dirname(__file__), "..", "rules-entry",
                      "ipkeys"))
@@ -110,7 +110,7 @@ def test_stream_ipkeys_equal_batch(spark, tmp_path):
     _write_chunks(spark, rows, in_dir, n_chunks=3)
     batch = _batch_result(spark, rows, rs)
     stream = _stream_result(spark, in_dir, rs, max_files=1)
-    # every stage kind must flip at least once or state isn't exercised
+    # every store kind must flip at least once or state isn't exercised
     assert (batch["suppress_after"]).any()
     assert set(batch["xbit_pass"].unique()) == {True, False}
     assert set(batch["flexbit_pass"].unique()) == {True, False}
@@ -118,11 +118,10 @@ def test_stream_ipkeys_equal_batch(spark, tmp_path):
 
 
 def test_stream_dual_track_equal_batch(spark, tmp_path):
-    """after + threshold with DIFFERENT tracks on one rule — the batch
-    STAGED-fallback shape (two keyed stages) — streams through a per-sid
-    "d"-composite state group (both stores are sid-scoped) and must
-    reproduce the batch result exactly, with both suppression kinds
-    actually flipping."""
+    """after + threshold with DIFFERENT tracks on one rule — two state
+    keys per row — streams through one serial state group for the rule's
+    cluster and must reproduce the batch result exactly, with both
+    suppression kinds actually flipping."""
     from sagan_spark.rules.compiler import compile_ruleset
     rs = compile_ruleset(
         'alert syslog any any -> any any (msg:"dual"; '
@@ -130,8 +129,8 @@ def test_stream_dual_track_equal_batch(spark, tmp_path):
         "after: track by_src, count 2, seconds 604800; "
         "threshold: type limit, track by_dst, count 2, seconds 604800; "
         "classtype:misc-attack; sid:9; rev:1;)")
-    from sagan_spark.correlate import single_key_per_row
-    assert not single_key_per_row(rs)   # batch takes the staged fallback
+    from sagan_spark.correlate import cluster_modes
+    assert cluster_modes(rs) == {0: "serial"}
     rows = gen_rows(12)
     # a 3-address src pool recurring across convs: the after store (by
     # extracted src) and the threshold store (by conv-fallback dst) both
@@ -145,6 +144,36 @@ def test_stream_dual_track_equal_batch(spark, tmp_path):
     assert batch["suppress_after"].any()
     assert batch["suppress_thresh"].any()
     assert not batch["suppress_thresh"].all()
+    pd.testing.assert_frame_equal(batch, stream)
+
+
+def test_stream_cross_store_equal_batch(spark, tmp_path):
+    """A rule gated by an xbit AND counted by after on parse_src_ip keys
+    (two stores on one row) streams through its cluster's serial state
+    group and reproduces the batch result, with the gate and the
+    suppression both flipping."""
+    from sagan_spark.correlate import cluster_modes
+    from sagan_spark.rules.compiler import compile_ruleset
+    rs = compile_ruleset("\n".join([
+        'alert syslog any any -> any any (msg:"s"; content:"stage1"; '
+        'parse_src_ip: 1; xbits: set,xa,track ip_src,expire 600; '
+        'classtype:misc-attack; sid:41; rev:1;)',
+        'alert syslog any any -> any any (msg:"c"; content:"stage2"; '
+        'parse_src_ip: 1; xbits: isset,xa,track ip_src; '
+        'after: track by_src, count 1, seconds 604800; '
+        'classtype:misc-attack; sid:42; rev:1;)',
+    ]))
+    assert cluster_modes(rs) == {0: "serial"}
+    rows = gen_rows(12)
+    for i, r in enumerate(rows):
+        stage = "stage1" if i % 5 == 2 else "stage2"
+        r["text"] = f"{stage} from 10.0.0.{i % 3} port 80"
+    in_dir = str(tmp_path / "stream_cross")
+    _write_chunks(spark, rows, in_dir, n_chunks=3)
+    batch = _batch_result(spark, rows, rs)
+    stream = _stream_result(spark, in_dir, rs, max_files=1)
+    assert set(batch["xbit_pass"].unique()) == {True, False}
+    assert set(batch["suppress_after"].unique()) == {True, False}
     pd.testing.assert_frame_equal(batch, stream)
 
 
@@ -216,8 +245,8 @@ def test_late_rows_accumulator(spark, tmp_path):
 
 def test_stream_none_flexbit_equal_batch(spark, tmp_path):
     """'none'-direction flexbits (cross-conv state, flexbit-mmap.c:124)
-    route through the single global state group instead of raising, and
-    reproduce the batch general-path fold exactly."""
+    route through one state group per flexbit cluster instead of raising,
+    and reproduce the batch fold exactly."""
     from sagan_spark.rules.compiler import compile_ruleset
     rs = compile_ruleset("\n".join([
         'alert syslog any any -> any any (msg:"s"; content:"stage1"; '

@@ -84,14 +84,6 @@ def main() -> int:
     ap.add_argument("--reps", type=int, default=3,
                     help="back-to-back N+4N reps; MEDIAN efficiency is "
                          "the headline (host-noise guard)")
-    ap.add_argument("--coloc", action="store_true",
-                    help="also run the co-location control each rep: "
-                         "shards concurrent FULL-input executors on "
-                         "disjoint cores.  Identical single-executor "
-                         "jobs with zero coordination, so wall_N / "
-                         "wall_coloc isolates the shared-box hardware "
-                         "penalty (memory bandwidth / LLC) from engine "
-                         "scaling: raw_eff = hw_factor x engine_eff")
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
@@ -144,30 +136,6 @@ def main() -> int:
                 ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
                 capture_output=True, text=True).stdout.strip(),
         }
-        if args.coloc:
-            # co-location control: same solo job x shards, concurrent,
-            # disjoint cores, FULL input each — no work splitting, no
-            # engine coordination.  Slowdown vs the solo N run is pure
-            # shared-box hardware contention.
-            cprocs = [run_exec(k * E, (k + 1) * E - 1, E, shard_paths,
-                               os.path.join(args.workdir, f"outC_{k}"),
-                               args.rules)
-                      for k in range(args.shards)]
-            cc = collect(cprocs)
-            s3 = _stat()
-            wall_c = max(r["wall_sec"] for r in cc)
-            rep.update({
-                "wall_coloc": wall_c,
-                "walls_coloc": [r["wall_sec"] for r in cc],
-                "steal_coloc_pct": steal_pct(s2, s3),
-                # solo-vs-co-tenant hardware penalty (<=1 under contention)
-                "hw_factor": round(wall_n / wall_c, 3),
-                # engine scaling with hardware held constant: in coloc,
-                # each box-saturated executor does ALL shards; in 4N it
-                # does one shard — perfect engine scaling => wall_4N =
-                # wall_coloc / shards.  raw eff == hw_factor x eff_engine.
-                "eff_engine": round(wall_c / (args.shards * wall_4n), 3),
-            })
         reps.append(rep)
         with open(series_path, "a") as f:
             f.write(json.dumps(reps[-1]) + "\n")
@@ -213,45 +181,6 @@ def main() -> int:
                        for r in reps],
         "per_executor_4N_walls": mid["walls_4N"],
     }
-    # decomposition evidence from reps that ran the co-location control
-    coloc_reps = sorted((r for r in reps if r.get("wall_coloc")),
-                        key=lambda r: r["eff_engine"])
-    decomp = ""
-    if coloc_reps:
-        cm = coloc_reps[(len(coloc_reps) - 1) // 2]
-        result["coloc_control"] = {
-            "wall_coloc": cm["wall_coloc"], "hw_factor": cm["hw_factor"],
-            "eff_engine": cm["eff_engine"], "n_reps": len(coloc_reps),
-            "series": [(r["hw_factor"], r["eff_engine"])
-                       for r in coloc_reps],
-        }
-        decomp = f"""
-## Co-location control: hardware co-tenancy vs engine scaling
-
-The raw N->4N number above compares a solo 4-core executor (28 cores
-idle, full memory bandwidth to itself) against 4 co-tenant executors
-saturating the box — on a real cluster the 4N executors sit on separate
-hosts and keep their solo bandwidth.  The control isolates this: run the
-IDENTICAL solo job x {args.shards}, concurrently, disjoint cores, FULL
-input each (no work splitting, no engine coordination — any slowdown vs
-solo is pure shared-box hardware contention).
-
-  raw_eff = wall_N/({args.shards}*wall_4N)
-          = (wall_N/wall_coloc) x (wall_coloc/({args.shards}*wall_4N))
-          = hw_co-tenancy_factor x engine_scaling_eff
-
-Median rep ({len(coloc_reps)} coloc reps): wall_coloc = \
-{cm['wall_coloc']} s -> hw factor {cm['hw_factor']}, **engine scaling
-efficiency {cm['eff_engine']}** (series (hw, engine): \
-{result['coloc_control']['series']}).
-
-Reading: with hardware contention held constant, the engine splits the
-work across 4 executors at >= the criterion; the residual gap in the raw
-number is the single-box sandbox itself (the 4N config gets ~1/4 the
-memory bandwidth per executor that the N config enjoys), which the north
-rule's real multi-host cluster does not share.  Raw medians stay
-reported above — nothing is substituted.
-"""
     print(json.dumps(result))
     r4walls = mid["walls_4N"]
 
@@ -262,13 +191,6 @@ reported above — nothing is substituted.
     tail = ""
     if os.path.exists(md):
         old = open(md).read()
-        # drop the previous run's own coloc section so reruns don't stack
-        # duplicates (hand-written sections are preserved untouched)
-        ch = "\n## Co-location control: hardware co-tenancy vs engine scaling\n"
-        j = old.find(ch)
-        if j != -1:
-            nxt = old.find("\n## ", j + 1)
-            old = old[:j] + (old[nxt:] if nxt != -1 else "")
         k = old.find("\n## ")
         if k != -1:
             tail = old[k:]
@@ -311,7 +233,7 @@ throughput is ~5k EPS default / ~50k EPS batched / 100k+ EPS tuned
 (doc/source/high-performance.rst:4-38).  Both configs above exceed the
 tuned single-node figure while also running the correlation, enrichment
 and multi-sink routing stages end-to-end.
-""" + decomp + tail)
+""" + tail)
     print(f"wrote {md}")
     return 0
 
