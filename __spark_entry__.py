@@ -14,7 +14,7 @@ pipeline decision in pure SQL:
 
 * content/pcre/meta_content matching  → LIKE / regexp predicates
 * parse_src_ip / parse_hash           → regexp_extract
-* classtype broadcast join (J1)       → inline VALUES join
+* classtype map lookup (J1)           → inline VALUES join
 * after / threshold window semantics  → recursive CTEs (the data-dependent
   reset anchoring of after.c:130-137 / threshold.c:131 is a sequential
   fold, hence WITH RECURSIVE)

@@ -67,7 +67,7 @@ def main(argv=None) -> int:
         warm = run_pipeline(spark, transcripts, ruleset)
         write_sink(warm.alerts, os.path.join(args.out, "_warmup"))
         warm.counters.collect()
-        spark.catalog.clearCache()
+        warm.unpersist()
 
     t0 = time.time()
     if args.checkpointed:

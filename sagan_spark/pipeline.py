@@ -1,4 +1,4 @@
-"""End-to-end pipeline composition: parse → match → enrich → correlate →
+"""End-to-end pipeline composition: parse → match → correlate → enrich →
 route (SURVEY §3.4).
 
 The plan, stage by stage:
@@ -11,7 +11,8 @@ The plan, stage by stage:
     → MATCH      vectorized mapInPandas matcher  [narrow, Arrow batches]
     → CORRELATE  after/threshold/xbit grouped    [the only shuffles —
                   keyed by state key, matched rows only]
-    → ENRICH     broadcast joins                 [no shuffle]
+    → ENRICH     ruleset-literal map lookups     [narrow projection; no
+                  join, no broadcast]
     → ROUTE      sink projections + counts       [map-side agg]
 
 Nothing in the plan materializes unpartitioned state; every stage is keyed

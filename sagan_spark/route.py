@@ -21,7 +21,7 @@ GID = 5000001  # SAGAN_PROCESSOR_GENERATOR_ID analog (oracle/engine.py GID)
 
 ALERT_COLUMNS = [
     # field set from alert.c:59-63 + send-alert.c:70-107, transcript-mapped;
-    # class_desc is joined in by enrich.enrich_alerts (J1)
+    # class_desc is added by enrich.enrich_alerts (J1)
     "conv_id", "turn_idx", "ts", "gid", "sid", "rev", "msg", "classtype",
     "pri", "ip_src", "src_port", "ip_dst", "dst_port",
     "proto", "text", "action",

@@ -731,7 +731,7 @@ def iter_rule_texts(text: str) -> list[str]:
 @dataclass
 class RuleSet:
     """The compiled analog of the reference's parallel global rule arrays
-    (src/rules.c:93-94) plus the broadcast-lookup side tables."""
+    (src/rules.c:93-94) plus the lookup side tables."""
 
     rules: tuple[CompiledRule, ...] = ()
     classifications: dict[str, tuple[str, int]] = field(default_factory=dict)

@@ -345,6 +345,73 @@ def test_alert_reference_and_gen_msg_columns(spark):
     assert a["gen_msg"].iloc[0] == "sagan test generator"
 
 
+def test_enrich_lookup_edge_cases(spark):
+    """The three lookups on their edge cases, values written by hand from
+    Sagan's semantics: the reference block of a sid gathers every rule
+    carrying it (references.c:141-209), duplicates kept and sorted; an
+    unconfigured reference name has an empty prefix; an unknown or null
+    classtype, an unmatched gid and an empty lookup table all give ''."""
+    from sagan_spark.enrich import enrich_alerts
+    rules = compile_ruleset(
+        'alert syslog any any -> any any (msg:"a"; content:"alpha"; '
+        'reference:url,b.example/x; reference:url,a.example/y; '
+        'classtype:known; sid:7;)\n'
+        'alert syslog any any -> any any (msg:"b"; content:"beta"; '
+        'reference:url,a.example/y; reference:nosuch,zz-1; '
+        'classtype:unlisted; sid:7;)\n'
+        'alert syslog any any -> any any (msg:"c"; content:"gamma"; '
+        'sid:8;)',
+        classification_text="config classification: known,Known Thing,2\n",
+        reference_text="config reference: url,http://\n",
+        gen_msg_text=("5000001 || 7 || seven\n"
+                      "1 || 8 || eight under another generator\n"))
+    rows = _rows_from({"c1": [(0, "alpha", 0), (1, "beta", 1),
+                              (2, "gamma", 2)]})
+    res = run_pipeline(spark, spark_df_from_rows(spark, rows), rules)
+    a = (res.alerts.toPandas().sort_values("turn_idx")
+         .reset_index(drop=True))
+    block = "http://a.example/y,http://a.example/y,http://b.example/x,zz-1"
+    assert a["sid"].tolist() == [7, 7, 8]
+    assert a["class_desc"].tolist() == ["Known Thing", "", ""]
+    assert a["ref_urls"].tolist() == [block, block, ""]
+    assert a["gen_msg"].tolist() == ["seven", "seven", ""]
+
+    null_cls = spark.createDataFrame([("known",), (None,)],
+                                     "classtype string")
+    got = enrich_alerts(null_cls, spark, rules).collect()
+    assert sorted((r.classtype or "", r.class_desc) for r in got) == [
+        ("", ""), ("known", "Known Thing")]
+
+    bare = compile_ruleset(
+        'alert syslog any any -> any any (msg:"d"; content:"delta"; '
+        'classtype:known; sid:9;)')
+    res = run_pipeline(spark, spark_df_from_rows(
+        spark, _rows_from({"c1": [(0, "delta", 0)]})), bare)
+    a = res.alerts.toPandas()
+    assert a[["class_desc", "ref_urls", "gen_msg"]].values.tolist() == [
+        ["", "", ""]]
+
+
+def test_alert_plan_has_no_lookup_join(spark, tmp_path):
+    """Enrichment is a projection over ruleset literals: the alert plan
+    holds no join, no broadcast and no driver-built lookup table, so a
+    per-run lookup DataFrame cannot come back unnoticed."""
+    import contextlib
+    import io
+    rows = gen_rows(5)
+    path = str(tmp_path / "in")
+    spark_df_from_rows(spark, rows).write.parquet(path)
+    rs = compile_ruleset_from_dir("rules-fixtures")
+    assert rs.classifications and rs.references and rs.gen_msg
+    res = run_pipeline(spark, spark.read.parquet(path), rs)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        res.alerts.explain("formatted")
+    plan = buf.getvalue()
+    for op in ("Join", "BroadcastExchange", "Scan ExistingRDD"):
+        assert op not in plan, op
+
+
 def test_file_driven_normalize_rulebase(spark):
     """X5 full: a custom normalize.rulebase overrides the built-in
     default (the liblognorm rulebase-path analog,

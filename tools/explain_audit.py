@@ -1,7 +1,7 @@
 """Dump the physical plans of the key pipeline stages into PLANS.md —
 the `.explain("formatted")` audit the scale review asks for: verifies
 column pruning / filter pushdown at the scan, the codegen'd candidate
-prefilter, broadcast joins for lookups, and the single-shuffle correlate
+prefilter, join-free literal-map lookups, and the single-shuffle correlate
 for conv-derived, IP-extracted and dual-track rulesets alike.
 
 Usage: python tools/explain_audit.py
@@ -103,8 +103,8 @@ def main() -> int:
          "the rule's cluster is one serial group, _key = s<sep>cluster)",
          grab(corr_dual)),
         ("Alert sink with classification + reference + gen-msg enrich "
-         "(three BroadcastHashJoins — no shuffle of the fact side)",
-         grab(alerts)),
+         "(three literal-map lookups in one Project — no Join, no "
+         "BroadcastExchange, no Scan ExistingRDD)", grab(alerts)),
         ("MinHash+LSH near-dup pairs (exact-duplicate collapse → banded "
          "equi-join candidates over representatives → exact-Jaccard "
          "verify → cluster re-expansion)", grab(lsh)),
