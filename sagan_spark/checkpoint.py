@@ -14,11 +14,12 @@ completed units and the driver skips them — restart-safe exactly-once at
 unit granularity, because each unit's sink writes go to
 ``<sink>/unit=<k>/`` (idempotent overwrite per unit).
 
-Caveat (documented): after/threshold/xbit keys that are *extracted IPs*
-can span conv buckets; a bucketed resume replays state per bucket.  The
-fixture corpus tracks by conv-derived keys (host fallback), where bucket
-containment is exact.  For IP-keyed rules at scale, set
-``bucket_expr="ip_src"`` so units align with the state key space.
+Limit: state keyed by *extracted IPs* (after/threshold/xbit/flexbit
+tracks on parse_src_ip and the like) can cross units, and each unit folds
+it separately, so a ``--checkpointed`` run is exact only for rulesets whose
+state is conv-keyed (the fixture corpus, via the host fallback).  For
+IP-keyed rulesets such as ``rules-entry/ipkeys`` it can emit different
+alerts than the one-shot ``run_pipeline``.
 """
 
 from __future__ import annotations
@@ -33,11 +34,10 @@ LINEAGE_SCHEMA = ("run_id string, unit int, status string, rows_in long, "
                   "alerts long, wall_sec double, finished_ts string")
 
 
-def unit_column(df: DataFrame, n_units: int,
-                bucket_col: str = "conv_id") -> DataFrame:
+def unit_column(df: DataFrame, n_units: int) -> DataFrame:
     """Deterministic unit assignment: pmod(xxhash64(conv_id), n)."""
     return df.withColumn(
-        "unit", F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_units))
+        "unit", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_units))
         .cast("int"))
 
 

@@ -427,6 +427,22 @@ def apply_fold_to_batches(fold, st: CorrState,
         yield pdf
 
 
+def with_default_flags(matches, ruleset: RuleSet):
+    """matches + the four CORR_SCHEMA flag columns at their pass values,
+    and whether any rule is stateful.  When none is, those defaults are
+    already the correlated result and no fold needs to run (shared by
+    run_correlate and streaming_alerts)."""
+    from pyspark.sql import functions as F
+
+    df = (matches
+          .withColumn("suppress_after", F.lit(False))
+          .withColumn("suppress_thresh", F.lit(False))
+          .withColumn("xbit_pass", F.lit(True))
+          .withColumn("flexbit_pass", F.lit(True)))
+    return df, any(r.after or r.threshold or r.xbits or r.flexbits
+                   for r in ruleset.rules)
+
+
 def run_correlate(matches, ruleset: RuleSet):
     """matches (MATCH_SCHEMA) → matches + suppression/gate flags
     (CORR_SCHEMA): ONE repartition(key, cluster) + sortWithinPartitions +
@@ -435,15 +451,8 @@ def run_correlate(matches, ruleset: RuleSet):
     combination exact; a partition-shared CorrState cannot alias across
     keys because every store is keyed by row-level values and clusters
     share no sid or name (state_key_cols)."""
-    from pyspark.sql import functions as F
-
-    df = (matches
-          .withColumn("suppress_after", F.lit(False))
-          .withColumn("suppress_thresh", F.lit(False))
-          .withColumn("xbit_pass", F.lit(True))
-          .withColumn("flexbit_pass", F.lit(True)))
-    if not any(r.after or r.threshold or r.xbits or r.flexbits
-               for r in ruleset.rules):
+    df, stateful = with_default_flags(matches, ruleset)
+    if not stateful:
         return df
 
     key, cluster = state_key_cols(ruleset)

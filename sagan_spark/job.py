@@ -2,11 +2,13 @@
 
     spark-submit --py-files sagan_spark.zip -m sagan_spark.job \\
         --rules rules-fixtures --convs 100000 --out /tmp/sagan_out \\
-        [--input /path/to/transcripts.parquet] [--units 16] [--resume]
+        [--input /path/to/transcripts.parquet] [--checkpointed --units 16]
 
 Reads (or synthesizes) the transcripts table, runs the full
-parse→match→enrich→correlate→route pipeline with checkpointed
-per-partition lineage, writes the four sinks, prints the counter row.
+parse→match→correlate→enrich→route pipeline, writes the alert, eve_alert
+and drop sinks and prints the counter row.  ``--checkpointed`` instead runs
+it unit by unit with per-unit lineage, skipping completed units on a rerun
+(see checkpoint.py for its limits).
 """
 
 from __future__ import annotations

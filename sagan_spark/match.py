@@ -27,7 +27,9 @@ Execution strategy (scale notes):
 
 from __future__ import annotations
 
+import operator
 import re
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -56,7 +58,6 @@ MATCH_SCHEMA = (
     "after_key string, thresh_key string, xbit_key string"
 )
 
-_OUT_COLS = [c.split()[0] for c in MATCH_SCHEMA.split(", ")]
 _DTYPES = {"turn_idx": "int32", "epoch": "int64", "rule_idx": "int32",
            "sid": "int64", "rev": "int32", "pri": "int32",
            "src_port": "int32", "dst_port": "int32"}
@@ -137,12 +138,6 @@ class _RuleProgram:
             alt = re.compile("|".join(re.escape(a) for a in m.alternatives),
                              flags)
             self.metas.append((_window_bounds(m, prev_depth), alt, m.negated))
-        self.needs_extract = bool(
-            rule.parse_src_ip or rule.parse_dst_ip or rule.parse_port or
-            rule.parse_hash or rule.parse_proto or rule.parse_proto_program
-            or rule.normalize or not rule.head.all_any or rule.blacklist
-            or rule.intel or rule.geoip_track
-            or rule.after or rule.threshold or rule.xbits or rule.flexbits)
         # rows of a "complex" rule need the per-row extract/flow/gate loop;
         # everything else (incl. rules that only need correlation keys from
         # the conv_id fallback) is assembled fully vectorized
@@ -324,52 +319,13 @@ def _regex_required_literal(pattern: str) -> str:
     return "".join(out)
 
 
-def _rule_prefilter(rule):
-    """A Catalyst predicate satisfied by every row `rule` could match, or
-    None when no conservative predicate exists (e.g. only negated
-    contents).  Uses the rule's cheapest positive body pattern; window
-    modifiers (offset/depth/...) only shrink the match region, so a plain
-    contains is a sound superset."""
-    import re as _re
-
-    from pyspark.sql import functions as F
-
-    for c in rule.contents:
-        if not c.negated:
-            return (F.lower(F.col("text")).contains(c.pattern.lower())
-                    if c.nocase else F.col("text").contains(c.pattern))
-    for m in rule.meta_contents:
-        if not m.negated and m.alternatives:
-            pred = None
-            for a in m.alternatives:
-                p = (F.lower(F.col("text")).contains(a.lower())
-                     if m.nocase else F.col("text").contains(a))
-                pred = p if pred is None else (pred | p)
-            return pred
-    for p in rule.pcres:
-        # a required literal beats rlike: the JVM contains-chain is a
-        # substring scan, the regex is per-row NFA work × rule count
-        lit = _regex_required_literal(p.pattern)
-        if len(lit) >= 4:
-            return (F.lower(F.col("text")).contains(lit.lower())
-                    if p.flags & _re.I else F.col("text").contains(lit))
-        if _java_safe_regex(p.pattern):
-            prefix = ""
-            if p.flags & _re.I:
-                prefix += "(?i)"
-            if p.flags & _re.S:
-                prefix += "(?s)"
-            if p.flags & _re.M:
-                prefix += "(?m)"
-            return F.col("text").rlike(prefix + p.pattern)
-    return None
-
-
 def _rule_prefilter_key(rule):
-    """Dedup key for the rule's cheapest positive predicate (mirrors
-    _rule_prefilter's choice).  Deployed rulesets share first literals
-    heavily (hundreds of signatures keyed on the same program/service
-    token), so the OR-chain is built over DISTINCT predicates — the
+    """The rule's cheapest positive body predicate as a hashable key, or
+    None when no conservative predicate exists (e.g. only negated
+    contents).  Window modifiers (offset/depth/...) only shrink the match
+    region, so a plain contains is a sound superset.  Deployed rulesets
+    share first literals heavily (hundreds of signatures keyed on the same
+    program/service token), so candidate_filter ORs DISTINCT keys — the
     evaluation cost scales with distinct literals, not rule count."""
     for c in rule.contents:
         if not c.negated:
@@ -378,16 +334,37 @@ def _rule_prefilter_key(rule):
     for m in rule.meta_contents:
         if not m.negated and m.alternatives:
             return ("meta", m.alternatives, m.nocase)
-    import re as _re
-
     for p in rule.pcres:
+        # a required literal beats rlike: the JVM contains-chain is a
+        # substring scan, the regex is per-row NFA work × rule count
         lit = _regex_required_literal(p.pattern)
+        nocase = bool(p.flags & re.I)
         if len(lit) >= 4:
-            return ("content", lit.lower() if p.flags & _re.I else lit,
-                    bool(p.flags & _re.I))
+            return ("content", lit.lower() if nocase else lit, nocase)
         if _java_safe_regex(p.pattern):
             return ("pcre", p.pattern, p.flags)
     return None
+
+
+def _key_predicate(key):
+    """The Catalyst predicate a _rule_prefilter_key stands for."""
+    from pyspark.sql import functions as F
+
+    def contains(lit: str, nocase: bool):
+        # a nocase literal is already lower-cased
+        return (F.lower(F.col("text")).contains(lit) if nocase
+                else F.col("text").contains(lit))
+
+    kind, arg, mod = key
+    if kind == "content":
+        return contains(arg, mod)
+    if kind == "meta":
+        return reduce(operator.or_, (contains(a.lower() if mod else a, mod)
+                                     for a in arg))
+    prefix = "".join(tag for flag, tag in
+                     ((re.I, "(?i)"), (re.S, "(?s)"), (re.M, "(?m)"))
+                     if mod & flag)
+    return F.col("text").rlike(prefix + arg)
 
 
 def candidate_filter(ruleset: RuleSet):
@@ -396,18 +373,10 @@ def candidate_filter(ruleset: RuleSet):
     only a few percent of the table is ever serialized into Python.
     Returns None (no filtering possible) if any rule lacks a positive
     predicate."""
-    seen = set()
-    pred = None
-    for r in ruleset.rules:
-        key = _rule_prefilter_key(r)
-        if key is None:
-            return None
-        if key in seen:
-            continue
-        seen.add(key)
-        p = _rule_prefilter(r)
-        pred = p if pred is None else (pred | p)
-    return pred
+    keys = [_rule_prefilter_key(r) for r in ruleset.rules]
+    if not keys or None in keys:
+        return None
+    return reduce(operator.or_, map(_key_predicate, dict.fromkeys(keys)))
 
 
 def _vec_track_key(tracks, ip_src, src_port, ip_dst, dst_port, user,
@@ -424,9 +393,7 @@ def _vec_track_key(tracks, ip_src, src_port, ip_dst, dst_port, user,
 
 
 def iter_match_frames(pdf: pd.DataFrame, ruleset: RuleSet,
-                      programs: list[_RuleProgram],
-                      default_port: int = DEFAULT_PORT,
-                      default_proto: str = DEFAULT_PROTO
+                      programs: list[_RuleProgram]
                       ) -> Iterator[pd.DataFrame]:
     """Yield one (event x matched-rule) frame PER RULE.  Streaming
     frames to the Arrow writer instead of concatenating one giant batch
@@ -465,10 +432,10 @@ def iter_match_frames(pdf: pd.DataFrame, ruleset: RuleSet,
             # complex rules in the batch — SURVEY §2.3 X1's "one pass of
             # a compiled IP+port regex per text batch")
             if ctx is None:
-                ctx = BatchExtract(text, tool, default_port,
+                ctx = BatchExtract(text, tool, DEFAULT_PORT,
                                    ruleset.normalize_rulebase)
             ex = assemble_extract(rule, ctx, alive, conv_np, tool_np,
-                                  default_port, default_proto)
+                                  DEFAULT_PORT, DEFAULT_PROTO)
             mask = np.ones(alive.size, dtype=bool)
             if not rule.head.all_any:
                 mask &= flow_mask(rule, ctx, ex)
@@ -497,10 +464,10 @@ def iter_match_frames(pdf: pd.DataFrame, ruleset: RuleSet,
             # fully vectorized: fallback addressing only (engine.c:967-1045)
             m = int(alive.size)
             ip_src = conv_np[alive]
-            src_port = np.full(m, default_port, dtype=np.int32)
+            src_port = np.full(m, DEFAULT_PORT, dtype=np.int32)
             ip_dst = ip_src
             dst_port = src_port
-            proto = np.full(m, default_proto, dtype=object)
+            proto = np.full(m, DEFAULT_PROTO, dtype=object)
             username = np.full(m, "", dtype=object)
             hsh = np.full(m, "", dtype=object)
 
@@ -544,29 +511,7 @@ def iter_match_frames(pdf: pd.DataFrame, ruleset: RuleSet,
         yield frame
 
 
-def _empty_match_frame() -> pd.DataFrame:
-    # dtype-correct empty frame: a bare [] column defaults to float64,
-    # which Arrow cannot cast to timestamp for the ts column
-    return pd.DataFrame({
-        c: pd.Series([], dtype="datetime64[ns]" if c == "ts"
-                     else _DTYPES.get(c, "object"))
-        for c in _OUT_COLS})
-
-
-def match_batch(pdf: pd.DataFrame, ruleset: RuleSet,
-                programs: list[_RuleProgram],
-                default_port: int = DEFAULT_PORT,
-                default_proto: str = DEFAULT_PROTO) -> pd.DataFrame:
-    """Single-frame form of iter_match_frames (tests / direct use)."""
-    frames = list(iter_match_frames(pdf, ruleset, programs,
-                                    default_port, default_proto))
-    if not frames:
-        return _empty_match_frame()
-    return pd.concat(frames, ignore_index=True)
-
-
-def build_matcher(ruleset: RuleSet, default_port: int = DEFAULT_PORT,
-                  default_proto: str = DEFAULT_PROTO):
+def build_matcher(ruleset: RuleSet):
     """Returns a mapInPandas function.  The RuleSet travels in the task
     closure (compiled regexes are rebuilt per executor, not pickled);
     per-rule frames stream straight to the Arrow writer."""
@@ -574,15 +519,12 @@ def build_matcher(ruleset: RuleSet, default_port: int = DEFAULT_PORT,
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         programs = compile_programs(ruleset)
         for pdf in batches:
-            yield from iter_match_frames(pdf, ruleset, programs,
-                                         default_port, default_proto)
+            yield from iter_match_frames(pdf, ruleset, programs)
 
     return fn
 
 
-def run_match(parsed_df, ruleset: RuleSet,
-              default_port: int = DEFAULT_PORT,
-              default_proto: str = DEFAULT_PROTO):
+def run_match(parsed_df, ruleset: RuleSet):
     """parsed transcripts → exploded (event × matched rule) DataFrame.
 
     Plan shape: column-pruned projection → JVM-side candidate prefilter
@@ -593,6 +535,4 @@ def run_match(parsed_df, ruleset: RuleSet,
     pref = candidate_filter(ruleset)
     if pref is not None:
         needed = needed.filter(pref)
-    return needed.mapInPandas(
-        build_matcher(ruleset, default_port, default_proto),
-        schema=MATCH_SCHEMA)
+    return needed.mapInPandas(build_matcher(ruleset), schema=MATCH_SCHEMA)

@@ -56,9 +56,10 @@ from .correlate import (
     apply_fold_to_batches,
     state_key_cols,
     unified_fold,
+    with_default_flags,
 )
 from .datagen import TRANSCRIPTS_SCHEMA
-from .match import MATCH_SCHEMA, build_matcher, candidate_filter
+from .match import run_match
 from .parse import parse_transcripts, split_ignored
 from .rules.compiler import RuleSet
 
@@ -207,26 +208,11 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
     which event-time eviction is exact) are tallied into it, so backfill
     deeper than one horizon is observable instead of silently consulting
     pruned state.  Pass ``spark.sparkContext.accumulator(0)``."""
-    from pyspark.sql import functions as F
-
     if state_timeout_ms is None:
         state_timeout_ms = default_state_timeout_ms(ruleset)
     parsed = parse_transcripts(transcripts_stream)
     kept, _ = split_ignored(parsed, ruleset.ignore_list)
-    needed = kept.select("conv_id", "turn_idx", "role", "text", "tool",
-                         "ts", "epoch")
-    pref = candidate_filter(ruleset)
-    if pref is not None:
-        needed = needed.filter(pref)
-    matches = needed.mapInPandas(build_matcher(ruleset),
-                                 schema=MATCH_SCHEMA)
-    stateful = any(r.after or r.threshold or r.xbits or r.flexbits
-                   for r in ruleset.rules)
-    base = (matches
-            .withColumn("suppress_after", F.lit(False))
-            .withColumn("suppress_thresh", F.lit(False))
-            .withColumn("xbit_pass", F.lit(True))
-            .withColumn("flexbit_pass", F.lit(True)))
+    base, stateful = with_default_flags(run_match(kept, ruleset), ruleset)
     if not stateful:
         return base
     key, _ = state_key_cols(ruleset)

@@ -20,7 +20,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
-from tools.check_oracle import canon  # noqa: E402
+from tools.check_oracle import canon, register_views  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -31,14 +31,7 @@ _TAIL = list(entry.queries())[entry.GATE_WINDOW:]
 def duck():
     import duckdb
     con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        p = os.path.join(SF, f"{t}.parquet")
-        if os.path.isdir(p):
-            con.execute(f"CREATE VIEW {t} AS "
-                        f"SELECT * FROM read_parquet('{p}/*.parquet')")
-        elif os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    register_views(con, SF)
     yield con
     con.close()
 

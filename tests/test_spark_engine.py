@@ -412,6 +412,55 @@ def test_alert_plan_has_no_lookup_join(spark, tmp_path):
         assert op not in plan, op
 
 
+def test_candidate_filter(spark):
+    """The JVM prefilter ORs one positive predicate per rule, each
+    predicate once: a nocase content lower-cases the text, a meta_content
+    ORs its expanded alternatives, a pcre with a >=4-char leading literal
+    becomes a contains and a Java-safe one an rlike.  One rule without a
+    positive predicate disables the filter.  Kept rows are a superset of
+    the rows the rules match."""
+    from sagan_spark.match import candidate_filter
+
+    def pred(*bodies):
+        rules = [f'alert syslog any any -> any any (msg:"m"; {b} sid:{i};)'
+                 for i, b in enumerate(bodies, 1)]
+        return candidate_filter(
+            compile_ruleset("\n".join(["var USERS mary,bob", *rules])))
+
+    texts = ["DISK FULL on /var", "disk ok", "user bob login",
+             "user eve login", "session opened for root", "session closed",
+             "BARBAZ", "baz", "sshd: fail", "sshd: accept"]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+
+    def kept(p):
+        return sorted(r.text for r in df.filter(p).collect())
+
+    cases = [
+        ('content:"Disk Full"; nocase;',
+         "contains(lower(text), 'disk full')", ["DISK FULL on /var"]),
+        ('meta_content:"user %sagan% login",$USERS;',
+         "or(contains(text, 'user mary login'), "
+         "contains(text, 'user bob login'))", ["user bob login"]),
+        (r'pcre:"/session opened for \w+/";',
+         "contains(text, 'session opened for ')",
+         ["session opened for root"]),
+        ('pcre:"/(foo|bar)baz/i";', "rlike(text, '(?i)(foo|bar)baz')",
+         ["BARBAZ"]),
+    ]
+    for body, expr, rows in cases:
+        p = pred(body)
+        assert str(p) == f"Column<'{expr}'>", body
+        assert kept(p) == rows, body
+
+    assert pred('content:!"ok";') is None
+    assert pred('content:"sshd";', 'content:!"ok";') is None
+
+    shared = pred('content:"sshd"; content:"fail";',
+                  'content:"sshd"; content:"accept";')
+    assert str(shared) == "Column<'contains(text, 'sshd')'>"
+    assert kept(shared) == ["sshd: accept", "sshd: fail"]
+
+
 def test_file_driven_normalize_rulebase(spark):
     """X5 full: a custom normalize.rulebase overrides the built-in
     default (the liblognorm rulebase-path analog,

@@ -36,6 +36,18 @@ def canon(df: pd.DataFrame) -> tuple[int, list[str], str]:
     return len(df), list(df.columns), h
 
 
+def register_views(con, sf_dir: str) -> None:
+    """One DuckDB view per table parquet present under ``sf_dir``."""
+    for t in ("region nation customer supplier part orders lineitem events "
+              "documents embeddings").split():
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(p):           # Spark-written parquet directory
+            con.execute(f"CREATE VIEW {t} AS "
+                        f"SELECT * FROM read_parquet('{p}/*.parquet')")
+        elif os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -45,14 +57,7 @@ def main() -> int:
 
     spark = get_spark("oracle_check")
     con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(p):           # Spark-written parquet directory
-            con.execute(f"CREATE VIEW {t} AS "
-                        f"SELECT * FROM read_parquet('{p}/*.parquet')")
-        elif os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    register_views(con, sf_dir)
 
     qs, os_ = E.queries(), E.oracle_sql()
     failures = 0

@@ -1,6 +1,6 @@
 """Derive a larger deterministic benchmark scale from an existing
-testdata dir (default: sf0.1 × 10 → "sf1", ~1M turns) so per-query bench
-walls exit Spark fixed-cost dominance.
+testdata dir (default: sf0.1 × 10 → "sf1", ~1M turns) so per-query
+scale-smoke walls exit Spark fixed-cost dominance.
 
 Each copy k shifts the integer keys by k·OFFSET:
   events:     event_id += k·1e9, user_id += k·10000  (new conversations,
@@ -14,7 +14,7 @@ Bench-only data (the correctness gate stays on the driver's read-only
 /root/testdata sf dirs).  Usage:
 
     python tools/gen_sf.py --out /tmp/sf1 --mult 10
-    SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py
+    python tools/scale_smoke.py /tmp/sf1
 """
 
 from __future__ import annotations
