@@ -410,7 +410,7 @@ def _pipeline_res(spark: SparkSession, sf_dir: str):
 # ---------------------------------------------------------------------------
 
 def _q_pipeline_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: full parse→match→enrich→correlate→route, alert sink."""
+    """Flagship: full parse→match→correlate→enrich→route, alert sink."""
     res = _pipeline_res(spark, sf_dir)
     return res.alerts.select(
         "conv_id", "turn_idx",

@@ -5,10 +5,15 @@
         [--input /path/to/transcripts.parquet] [--checkpointed --units 16]
 
 Reads (or synthesizes) the transcripts table, runs the full
-parse→match→correlate→enrich→route pipeline, writes the alert, eve_alert
-and drop sinks and prints the counter row.  ``--checkpointed`` instead runs
-it unit by unit with per-unit lineage, skipping completed units on a rerun
-(see checkpoint.py for its limits).
+parse→match→correlate→enrich→route pipeline through
+``pipeline.run_job``, which writes the alert, eve_alert and drop sinks to
+``<out>/<sink>``, and prints the counter row.  ``--warmup`` first runs the
+same job untimed into ``<out>/_warmup``.  ``--checkpointed`` instead runs
+one job per conv unit into ``<out>/unit=<k>/<sink>``, records each unit's
+counter row in its lineage row, skips completed units on a rerun and
+prints the counters summed over every completed unit — the one-shot
+counter row once all units are done.  It accepts only rulesets whose
+state is conv-keyed (see checkpoint.py).
 """
 
 from __future__ import annotations
@@ -41,10 +46,9 @@ def main(argv=None) -> int:
 
     from .checkpoint import run_with_checkpoint
     from .datagen import transcripts_df
-    from .pipeline import run_pipeline
+    from .pipeline import run_job
     from .rules.compiler import compile_ruleset_from_dir
     from .session import get_spark
-    from .sinks import write_sink
 
     spark = get_spark("sagan_spark_job", cores=args.cores)
     # Split sizing: target ~4 task waves per core on the scan+match stage.
@@ -66,39 +70,19 @@ def main(argv=None) -> int:
                                      noise_pct=args.noise)
 
     if args.warmup and not args.checkpointed:
-        warm = run_pipeline(spark, transcripts, ruleset)
-        write_sink(warm.alerts, os.path.join(args.out, "_warmup"))
-        warm.counters.collect()
-        warm.unpersist()
+        run_job(spark, transcripts, ruleset,
+                os.path.join(args.out, "_warmup"))
 
     t0 = time.time()
     if args.checkpointed:
-        summary = run_with_checkpoint(spark, transcripts, ruleset,
-                                      args.out, args.run_id, args.units)
-        print(json.dumps(summary))
-        return 0
-
-    res = run_pipeline(spark, transcripts, ruleset)
-    # materialize the shared upstream (scan→match→correlate) once, then
-    # run the three sink writes + counters as CONCURRENT Spark jobs: the
-    # scheduler interleaves their stages, so per-action barrier latency
-    # overlaps instead of summing (each alone underutilizes the executor)
-    from concurrent.futures import ThreadPoolExecutor
-
-    res.correlated.count()
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        fa = pool.submit(write_sink, res.alerts,
-                         os.path.join(args.out, "alert"))
-        fe = pool.submit(write_sink, res.eve_alerts,
-                         os.path.join(args.out, "eve_alert"))
-        fd = pool.submit(write_sink, res.drops,
-                         os.path.join(args.out, "drop"))
-        fc = pool.submit(lambda: res.counters.collect()[0].asDict())
-        fa.result(), fe.result(), fd.result()
-        counters = fc.result()
+        counters = run_with_checkpoint(spark, transcripts, ruleset,
+                                       args.out, args.run_id, args.units)
+    else:
+        counters = run_job(spark, transcripts, ruleset, args.out)
     counters["wall_sec"] = round(time.time() - t0, 2)
-    counters["turns_per_sec"] = round(
-        counters["events_received"] / max(counters["wall_sec"], 1e-9))
+    if not args.checkpointed:
+        counters["turns_per_sec"] = round(
+            counters["events_received"] / max(counters["wall_sec"], 1e-9))
     print(json.dumps({k: (int(v) if not isinstance(v, float) else v)
                       for k, v in counters.items()}))
     return 0

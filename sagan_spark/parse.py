@@ -20,8 +20,6 @@ SENTINELS = {
     "conv_id": "UNKNOWN_HOST",
 }
 
-TRANSCRIPT_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
-
 
 def parse_transcripts(df: DataFrame) -> DataFrame:
     """Normalize a raw transcripts DataFrame: sentinel-fill nulls, add

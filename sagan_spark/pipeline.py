@@ -22,6 +22,8 @@ work (SURVEY §7.3).
 
 from __future__ import annotations
 
+import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,31 +31,24 @@ from pyspark.sql import DataFrame, SparkSession
 from .correlate import run_correlate
 from .enrich import attach_gen_msg, attach_references, enrich_alerts
 from .match import run_match
-from .parse import (
-    ignore_condition,
-    malformed_counts,
-    parse_transcripts,
-    split_ignored,
-)
+from .parse import ignore_condition, parse_transcripts, split_ignored
 from .route import (
     alert_sink,
     drop_sink,
     eve_alert_sink,
-    eve_log_sink,
     sink_counts,
     to_eve_json,
 )
-from .rules.compiler import RuleSet, compile_ruleset_from_dir
+from .rules.compiler import RuleSet
+from .sinks import write_sink
 
 
 @dataclass
 class PipelineResult:
     alerts: DataFrame
     eve_alerts: DataFrame
-    eve_logs: DataFrame
     drops: DataFrame
     counters: DataFrame
-    malformed: DataFrame
     correlated: DataFrame   # pre-route, for inspection/metrics
     persisted: list = None  # frames this run persisted (for unpersist())
 
@@ -86,21 +81,40 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
     return PipelineResult(
         alerts=alerts,
         eve_alerts=eve_alert_sink(correlated, ruleset),
-        eve_logs=eve_log_sink(kept),
         drops=drop_sink(dropped),
         counters=sink_counts(correlated, parsed,
                              ignore_condition(ruleset.ignore_list), ruleset),
-        malformed=malformed_counts(parsed),
         correlated=correlated,
         persisted=[correlated],
     )
 
 
-def run_pipeline_from_dir(spark: SparkSession, transcripts: DataFrame,
-                          rules_dir: str) -> PipelineResult:
-    return run_pipeline(spark, transcripts,
-                        compile_ruleset_from_dir(rules_dir))
+def run_job(spark: SparkSession, transcripts: DataFrame, ruleset: RuleSet,
+            out_dir: str) -> dict:
+    """Run the pipeline and write its output: the alert, eve_alert and
+    drop sinks to ``<out_dir>/<sink>`` (``write_sink``), returning the
+    counter row.  The one writer of a batch run's sinks — the one-shot
+    job, its warm-up and every checkpoint unit go through it."""
+    res = run_pipeline(spark, transcripts, ruleset)
+    try:
+        # materialize the shared upstream (scan→match→correlate) once,
+        # then run the three sink writes + counters as CONCURRENT Spark
+        # jobs: the scheduler interleaves their stages, so per-action
+        # barrier latency overlaps instead of summing (each alone
+        # underutilizes the executor)
+        res.correlated.count()
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            fa = pool.submit(write_sink, res.alerts,
+                             os.path.join(out_dir, "alert"))
+            fe = pool.submit(write_sink, res.eve_alerts,
+                             os.path.join(out_dir, "eve_alert"))
+            fd = pool.submit(write_sink, res.drops,
+                             os.path.join(out_dir, "drop"))
+            fc = pool.submit(lambda: res.counters.collect()[0].asDict())
+            fa.result(), fe.result(), fd.result()
+            return fc.result()
+    finally:
+        res.unpersist()
 
 
-__all__ = ["PipelineResult", "run_pipeline", "run_pipeline_from_dir",
-           "to_eve_json"]
+__all__ = ["PipelineResult", "run_job", "run_pipeline", "to_eve_json"]

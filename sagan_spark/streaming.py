@@ -87,12 +87,9 @@ def _decode_state(blob: str) -> tuple[CorrState, int]:
     return st, int(d.get("m", 0))
 
 
-def default_state_timeout_ms(ruleset: RuleSet) -> int:
-    """Eviction default: 2× the largest rule window (after/threshold
-    seconds, xbit/flexbit expire) — the streaming analog of the
-    reference's Clean_IPC_Object stale-entry eviction (src/ipc.c:79-200).
-    Without a timeout, per-conv GroupState would grow unboundedly across
-    the conv_id keyspace in a long-running stream."""
+def _horizon_s(ruleset: RuleSet) -> int:
+    """The largest rule window in seconds (after/threshold seconds,
+    xbit/flexbit expire); 1800 when the ruleset has none."""
     horizon = 0
     for r in ruleset.rules:
         if r.after:
@@ -103,7 +100,15 @@ def default_state_timeout_ms(ruleset: RuleSet) -> int:
             horizon = max(horizon, xb.expire)
         for fb in r.flexbits:
             horizon = max(horizon, fb.timeout)
-    return 2 * horizon * 1000 if horizon else 3600_000
+    return horizon or 1800
+
+
+def default_state_timeout_ms(ruleset: RuleSet) -> int:
+    """Eviction default: 2× the largest rule window — the streaming analog
+    of the reference's Clean_IPC_Object stale-entry eviction
+    (src/ipc.c:79-200).  Without a timeout, per-conv GroupState would grow
+    unboundedly across the conv_id keyspace in a long-running stream."""
+    return 2 * _horizon_s(ruleset) * 1000
 
 
 def _make_pruner(ruleset: RuleSet):
@@ -120,7 +125,7 @@ def _make_pruner(ruleset: RuleSet):
     neither state nor expiry) and counts entry CREATIONS, so dropping an
     expired entry that a later `set` would have merely updated would
     double-count it."""
-    horizon = default_state_timeout_ms(ruleset) // 2000  # largest window
+    horizon = _horizon_s(ruleset)
     after_w = {(r.sid, r.rev): r.after.seconds
                for r in ruleset.rules if r.after}
     thresh_w = {r.sid: r.threshold.seconds
@@ -155,7 +160,7 @@ def _group_correlator(ruleset: RuleSet, timeout_ms: int = 0,
     entries and are tallied into the ``late_rows`` accumulator."""
     fold = unified_fold(ruleset)
     prune = _make_pruner(ruleset)
-    horizon = default_state_timeout_ms(ruleset) // 2000
+    horizon = _horizon_s(ruleset)
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
@@ -226,21 +231,3 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
                 timeoutConf=("ProcessingTimeTimeout" if state_timeout_ms
                              else "NoTimeout")))
 
-
-def run_stream_to_parquet(spark, in_path: str, out_path: str,
-                          ruleset: RuleSet, checkpoint: str):
-    """Start the streaming query writing emitted alerts to parquet with a
-    checkpoint (restart-safe exactly-once file sink)."""
-    from pyspark.sql import functions as F
-
-    alerts = streaming_alerts(spark, read_transcript_stream(spark, in_path),
-                              ruleset)
-    emitted = alerts.filter(
-        F.col("xbit_pass") & F.col("flexbit_pass") &
-        ~F.col("suppress_after") & ~F.col("suppress_thresh"))
-    return (emitted.writeStream
-            .format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .start())

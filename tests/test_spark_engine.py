@@ -125,19 +125,22 @@ def test_xbit_pair_equality(spark):
 
 
 def test_eve_log_and_malformed(spark, fixture_ruleset):
-    from datetime import datetime, timezone
+    from sagan_spark.parse import (malformed_counts, parse_transcripts,
+                                   split_ignored)
+    from sagan_spark.route import eve_log_sink
     rows = gen_rows(10)
     rows[3] = {**rows[3], "text": None}
     rows[4] = {**rows[4], "role": None}
-    res = run_pipeline(spark, spark_df_from_rows(spark, rows),
-                       fixture_ruleset)
-    m = res.malformed.toPandas().iloc[0]
+    df = spark_df_from_rows(spark, rows)
+    parsed = parse_transcripts(df)
+    m = malformed_counts(parsed).toPandas().iloc[0]
     assert int(m["malformed_text"]) == 1
     assert int(m["malformed_role"]) == 1
     assert int(m["events_received"]) == len(rows)
     # eve_log = processed (non-ignored) rows
-    c = res.counters.toPandas().iloc[0]
-    assert res.eve_logs.count() == int(c["events_processed"])
+    kept, _ = split_ignored(parsed, fixture_ruleset.ignore_list)
+    c = run_pipeline(spark, df, fixture_ruleset).counters.toPandas().iloc[0]
+    assert eve_log_sink(kept).count() == int(c["events_processed"])
 
 
 def test_eve_json_rendering(spark, fixture_ruleset):
@@ -709,48 +712,70 @@ def test_flexbit_exact_tally_overcount(spark):
 
 
 def test_checkpoint_resume(spark, tmp_path, monkeypatch):
-    """Kill-and-resume (north rule's resume requirement): a run that dies
-    mid-unit leaves completed units' lineage + sinks intact; the resumed
-    run skips exactly those units and the final sinks equal a single
-    uninterrupted run row-for-row."""
-    import pandas as _pd
+    """Kill-and-resume (north rule's resume requirement), checked against
+    the one-shot run: a run killed while unit 3 of 4 writes its sinks
+    keeps the two completed units' lineage; the resumed run skips exactly
+    those, and the units' alert, eve_alert and drop rows and summed
+    counters equal one uninterrupted ``run_job`` over the same rows."""
+    import os
 
     import sagan_spark.pipeline as pl
     from sagan_spark.checkpoint import run_with_checkpoint
 
-    rows = gen_rows(30)
-    df = spark_df_from_rows(spark, rows)
+    df = spark_df_from_rows(spark, gen_rows(30))
     rs = compile_ruleset_from_dir("rules-fixtures")
-
     out_full = str(tmp_path / "full")
-    full = run_with_checkpoint(spark, df, rs, out_full, "runA", n_units=4)
-    assert full["units_skipped"] == 0 and full["alerts"] > 0
+    full = pl.run_job(spark, df, rs, out_full)
 
     out_ck = str(tmp_path / "ck")
-    real = pl.run_pipeline
-    calls = {"n": 0}
+    real = pl.write_sink
 
-    def dying(spark_, part, ruleset, **kw):
-        calls["n"] += 1
-        if calls["n"] == 3:                       # die mid-3rd-unit
+    def dying(frame, path, **kw):
+        if path == os.path.join(out_ck, "unit=2", "drop"):
             raise RuntimeError("simulated executor loss")
-        return real(spark_, part, ruleset, **kw)
+        return real(frame, path, **kw)
 
-    monkeypatch.setattr(pl, "run_pipeline", dying)
+    monkeypatch.setattr(pl, "write_sink", dying)
     with pytest.raises(RuntimeError):
-        run_with_checkpoint(spark, df, rs, out_ck, "runB", n_units=4)
-    monkeypatch.setattr(pl, "run_pipeline", real)
+        run_with_checkpoint(spark, df, rs, out_ck, "runA", n_units=4)
+    monkeypatch.setattr(pl, "write_sink", real)
 
-    resumed = run_with_checkpoint(spark, df, rs, out_ck, "runC", n_units=4)
-    assert resumed["units_skipped"] == 2          # the two completed units
+    resumed = run_with_checkpoint(spark, df, rs, out_ck, "runB", n_units=4)
+    assert resumed.pop("units_skipped") == 2      # the two completed units
+    assert resumed.pop("units_total") == 4
+    assert resumed == full
 
-    def _read(out):
-        p = (spark.read.parquet(out + "/alert").toPandas()
-             .drop(columns=["unit"], errors="ignore"))
-        cols = sorted(c for c in p.columns if c != "ts")
-        return (p[cols].sort_values(cols).reset_index(drop=True))
+    def _rows(outs, sink):
+        p = pd.concat([spark.read.parquet(os.path.join(o, sink)).toPandas()
+                       for o in outs], ignore_index=True)
+        p = p.drop(columns=["bucket"]).astype(str)
+        cols = sorted(p.columns)
+        return p[cols].sort_values(cols).reset_index(drop=True)
 
-    _pd.testing.assert_frame_equal(_read(out_full), _read(out_ck))
+    units = [os.path.join(out_ck, f"unit={k}") for k in range(4)]
+    for sink in ("alert", "eve_alert", "drop"):
+        want = _rows([out_full], sink)
+        assert len(want), sink                    # every sink is exercised
+        pd.testing.assert_frame_equal(_rows(units, sink), want)
+
+
+def test_checkpoint_rejects_ip_keyed(spark, tmp_path):
+    """A ruleset whose state is keyed by extracted IPs crosses conv units,
+    so a checkpointed run is refused before any unit writes."""
+    import os
+
+    from sagan_spark.checkpoint import run_with_checkpoint
+
+    rs = compile_ruleset_from_dir(
+        os.path.join(os.path.dirname(__file__), "..", "rules-entry",
+                     "ipkeys"))
+    out = tmp_path / "ck"
+    with pytest.raises(ValueError, match="crosses conv units") as err:
+        run_with_checkpoint(spark, spark_df_from_rows(spark, gen_rows(4)),
+                            rs, str(out), "runA", n_units=4)
+    for r in rs.rules:
+        assert str(r.sid) in str(err.value)
+    assert not out.exists()
 
 
 def test_ipkeys_corpus_equals_oracle(spark):

@@ -4,9 +4,9 @@ rule's "N vs 4N executors, scaling efficiency ≥ 0.8").
 Cluster model: an *executor* is an independent pinned OS process running
 the identical spark-submit pipeline job (own JVM, own python workers) over
 its shard of the conv_id space — exactly how executors behave on a real
-cluster, and faithful to the engine's partitioning contract (all
-correlation state is conv-keyed, so conv-sharding is lossless; the same
-bucket(conv_id) sharding drives checkpoint/resume units).
+cluster.  Conv-sharding is lossless only when all correlation state is
+conv-keyed, so --rules must pass checkpoint.require_conv_keyed, the same
+check that guards the bucket(conv_id) checkpoint/resume units.
 
   config N  : 1 executor  × E cores → processes ALL shards
   config 4N : 4 executors × E cores → one shard each, concurrently
@@ -87,6 +87,10 @@ def main() -> int:
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
+    from sagan_spark.checkpoint import require_conv_keyed
+    from sagan_spark.rules.compiler import compile_ruleset_from_dir
+    require_conv_keyed(compile_ruleset_from_dir(
+        os.path.join(REPO, args.rules)))
     shard_paths = [os.path.join(args.workdir, f"shard{k}")
                    for k in range(args.shards)]
     if not all(os.path.exists(p) for p in shard_paths):
@@ -202,11 +206,12 @@ executors) with throughput scaling efficiency >= 0.8.
 
 Sandbox cluster model: an executor = an independent OS process (own JVM +
 python workers) pinned via taskset to {E} dedicated cores, running the
-identical `python -m sagan_spark.job` pipeline (parse -> match -> enrich
--> correlate -> route, 3 parquet sinks + counters, {args.rules} corpus,
+identical `python -m sagan_spark.job` pipeline (parse -> match -> correlate
+-> enrich -> route, 3 parquet sinks + counters, {args.rules} corpus,
 ~{args.noise}% non-matching turns) over its bucket(conv_id) shard of the
 input — the same conv-sharding that drives checkpoint/resume units, and
-lossless for correlation because every stateful key is conv-derived.
+lossless for correlation because every stateful key is conv-derived
+(checked by checkpoint.require_conv_keyed before any run).
 Jobs run with a warmup pass (JIT + python-worker spawn) and report the
 steady-state pass, as a long-running cluster job would.
 
