@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` runs the flagship Sagan-style parse → match → enrich →
-correlate → route pipeline (sagan_spark/) over a transcripts table derived
+``entry(spark)`` runs the flagship Sagan-style parse → match → correlate →
+enrich → route pipeline (sagan_spark/) over a transcripts table derived
 deterministically from the driver's ``events`` parquet; ``queries()`` /
 ``oracle_sql()`` expose every operator with a DuckDB-checkable ANSI-SQL
 oracle.
@@ -265,45 +265,26 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(T_SPARK)
 
 
-@lru_cache(maxsize=1)
-def _ruleset():
+@lru_cache(maxsize=None)
+def _corpus(name: str):
+    """The compiled ruleset of ``rules-entry/<name>`` ('' is rules-entry
+    itself)."""
     from sagan_spark.rules.compiler import compile_ruleset_from_dir
-    return compile_ruleset_from_dir(os.path.join(REPO, "rules-entry"))
+    return compile_ruleset_from_dir(os.path.join(REPO, "rules-entry", name))
 
 
-@lru_cache(maxsize=1)
-def _flex_ruleset():
-    from sagan_spark.rules.compiler import compile_ruleset_from_dir
-    return compile_ruleset_from_dir(
-        os.path.join(REPO, "rules-entry", "flexbit"))
-
-
-@lru_cache(maxsize=1)
-def _gates_ruleset():
-    from sagan_spark.rules.compiler import compile_ruleset_from_dir
-    return compile_ruleset_from_dir(
-        os.path.join(REPO, "rules-entry", "gates"))
-
-
-@lru_cache(maxsize=1)
-def _ipkeys_ruleset():
-    from sagan_spark.rules.compiler import compile_ruleset_from_dir
-    return compile_ruleset_from_dir(
-        os.path.join(REPO, "rules-entry", "ipkeys"))
-
-
-# the four IP-keyed correlate queries consume one correlated frame;
-# memoize it per (session, sf_dir) — same rationale as _PIPE_CACHE — so
-# the correctness gate (and scale smokes) pay match + correlate ONCE, not
-# once per query.  Each cache entry holds exactly one persisted frame
-# (freed by clear_entry_caches).
+# One memoized pipeline run per rules corpus: every query over a corpus
+# reads the same PipelineResult, so the correctness gate (one session,
+# every query) pays parse → match → correlate once per corpus and reuses the
+# persisted correlated frame.  Match-stage queries read ``correlated`` too:
+# correlate emits every matched row with its match columns unchanged.
 #
-# Cache keying: (applicationId, sf_dir) — applicationId is unique per
+# Keyed (applicationId, sf_dir, corpus) — applicationId is unique per
 # SparkContext lifetime, so a NEW session after a stop can never collide
 # with a dead entry (id(spark) could: CPython reuses ids).  Values carry
 # the owning session so entries of stopped sessions are evicted on every
 # access (their persisted frames died with the context).
-_IP_CORR_CACHE: dict = {}
+_RUNS: dict = {}
 
 
 def _session_live(spark: SparkSession) -> bool:
@@ -313,96 +294,41 @@ def _session_live(spark: SparkSession) -> bool:
         return False
 
 
-def _evict_stopped(cache: dict) -> None:
-    for k in [k for k, (sess, _) in cache.items()
-              if not _session_live(sess)]:
-        del cache[k]   # no unpersist: the frame died with its context
-
-
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
-def _ip_correlated_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated frame for the IP-keyed corpus — parse_src_ip keys give
-    every cluster a store key instead of conv_id (the reference's primary
-    deployment mode, after.c:108-110 hashes extracted addresses)."""
-    _evict_stopped(_IP_CORR_CACHE)
-    key = _cache_key(spark, sf_dir)
-    cached = _IP_CORR_CACHE.get(key)
-    if cached is not None:
-        return cached[1]
-    from pyspark import StorageLevel
-    from sagan_spark.correlate import cluster_modes, run_correlate
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _ipkeys_ruleset()
-    assert "store" in cluster_modes(rs).values()   # IP-derived keys
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    df = (run_correlate(run_match(parsed, rs), rs)
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    _IP_CORR_CACHE[key] = (spark, df)
-    return df
-
-
-# query name → memoized-frame family.  The driver's gate runs every query
-# in ONE session, so sibling queries share the family's persisted frame by
-# design; tools/scale_smoke.py clears caches at family BOUNDARIES (first
-# member pays the cold build, siblings measure like the driver sees them).
-MEMO_FAMILIES: dict[str, str] = {
-    **{q: "pipeline" for q in (
-        "pipeline_alerts", "sink_counts", "enrich_references", "fast_sink",
-        "unified2_table", "perfmon", "eve_render")},
-    **{q: "ipcorr" for q in (
-        "correlate_after_ip", "correlate_threshold_ip",
-        "correlate_xbit_pair", "correlate_flexbit_ip")},
-}
+def _run(spark: SparkSession, sf_dir: str, corpus: str):
+    """The memoized ``PipelineResult`` of ``rules-entry/<corpus>`` over the
+    transcripts of ``sf_dir``; the ``dynamic`` corpus runs through
+    ``run_pipeline_dynamic`` (its ``detections`` are set)."""
+    for k in [k for k, (sess, _) in _RUNS.items() if not _session_live(sess)]:
+        del _RUNS[k]   # no unpersist: the frames died with their context
+    key = (spark.sparkContext.applicationId, sf_dir, corpus)
+    if key not in _RUNS:
+        from sagan_spark.dynamic import run_pipeline_dynamic
+        from sagan_spark.pipeline import run_pipeline
+        rs, t = _corpus(corpus), _transcripts(spark, sf_dir)
+        if corpus == "dynamic":
+            res = run_pipeline_dynamic(
+                spark, t, rs, rules_root=os.path.join(REPO, "rules-entry",
+                                                      corpus),
+                sample_rate=5)[0]
+        else:
+            res = run_pipeline(spark, t, rs)
+        _RUNS[key] = (spark, res)
+    return _RUNS[key][1]
 
 
 def clear_entry_caches() -> None:
-    """Unpersist and drop every frame this module memoized (both the
-    conv-keyed PipelineResult cache and the IP-keyed correlate cache).
-    Tests call this to assert no persisted RDDs leak across queries."""
-    for sess, res in _PIPE_CACHE.values():
+    """Unpersist and drop every memoized pipeline run.  Tests call this to
+    assert no persisted RDDs leak across queries."""
+    for sess, res in _RUNS.values():
         if _session_live(sess):
             res.unpersist()
-    _PIPE_CACHE.clear()
-    for sess, df in _IP_CORR_CACHE.values():
-        if _session_live(sess):
-            df.unpersist()
-    _IP_CORR_CACHE.clear()
+    _RUNS.clear()
 
 
-def _matches_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts, split_ignored
-    rs = _ruleset()
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    kept, _ = split_ignored(parsed, rs.ignore_list)
-    return run_match(kept, rs)
-
-
-def _correlated_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sagan_spark.correlate import run_correlate
-    return run_correlate(_matches_df(spark, sf_dir), _ruleset())
-
-
-# seven queries consume the same full-pipeline result; memoize it per
-# (session, sf_dir) so the driver's gate pays the match/correlate stages
-# once (the persisted frames inside PipelineResult make re-reads cheap)
-_PIPE_CACHE: dict = {}
-
-
-def _pipeline_res(spark: SparkSession, sf_dir: str):
-    from sagan_spark.pipeline import run_pipeline
-    _evict_stopped(_PIPE_CACHE)
-    key = _cache_key(spark, sf_dir)
-    hit = _PIPE_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
-    res = run_pipeline(spark, _transcripts(spark, sf_dir), _ruleset())
-    _PIPE_CACHE[key] = (spark, res)
-    return res
+def _matched(spark: SparkSession, sf_dir: str, corpus: str, *sids):
+    """The corpus's matched (and correlated) rows of the given sids."""
+    return _run(spark, sf_dir, corpus).correlated.filter(
+        F.col("sid").isin(*sids))
 
 
 # ---------------------------------------------------------------------------
@@ -411,8 +337,7 @@ def _pipeline_res(spark: SparkSession, sf_dir: str):
 
 def _q_pipeline_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: full parse→match→correlate→enrich→route, alert sink."""
-    res = _pipeline_res(spark, sf_dir)
-    return res.alerts.select(
+    return _run(spark, sf_dir, "").alerts.select(
         "conv_id", "turn_idx",
         F.unix_timestamp("ts").cast("long").alias("epoch"),
         "sid", "rev", "action", "msg", "classtype", "class_desc",
@@ -423,8 +348,7 @@ def _q_pipeline_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res = _pipeline_res(spark, sf_dir)
-    return res.counters
+    return _run(spark, sf_dir, "").counters
 
 
 def _q_parse_sentinels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,59 +357,55 @@ def _q_parse_sentinels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_ignore_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sagan_spark.parse import parse_transcripts, split_ignored
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    _, dropped = split_ignored(parsed, _ruleset().ignore_list)
-    return dropped.select("conv_id", "turn_idx", "text")
+    return _run(spark, sf_dir, "").drops.select("conv_id", "turn_idx", "text")
 
 
 def _q_match_content_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_matches_df(spark, sf_dir).filter(F.col("sid") == 6000001)
+    return (_matched(spark, sf_dir, "", 6000001)
             .select("conv_id", "turn_idx", "sid", "ip_src",
                     F.col("src_port").cast("int").alias("src_port"), "proto"))
 
 
 def _q_match_pcre(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_matches_df(spark, sf_dir).filter(F.col("sid") == 6000002)
+    return (_matched(spark, sf_dir, "", 6000002)
             .select("conv_id", "turn_idx", "sid"))
 
 
 def _q_match_meta_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_matches_df(spark, sf_dir).filter(F.col("sid") == 6000003)
+    return (_matched(spark, sf_dir, "", 6000003)
             .select("conv_id", "turn_idx"))
 
 
 def _q_match_program_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_matches_df(spark, sf_dir).filter(F.col("sid") == 6000009)
+    return (_matched(spark, sf_dir, "", 6000009)
             .select("conv_id", "turn_idx", "ip_src",
                     F.col("src_port").cast("int").alias("src_port")))
 
 
 def _q_extract_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_matches_df(spark, sf_dir).filter(F.col("sid") == 6000008)
+    return (_matched(spark, sf_dir, "", 6000008)
             .select("conv_id", "turn_idx", "hash"))
 
 
 def _q_correlate_after(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_correlated_df(spark, sf_dir).filter(F.col("sid") == 6000004)
+    return (_matched(spark, sf_dir, "", 6000004)
             .select("conv_id", "turn_idx", "epoch", "suppress_after"))
 
 
 def _q_correlate_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_correlated_df(spark, sf_dir).filter(F.col("sid") == 6000005)
+    return (_matched(spark, sf_dir, "", 6000005)
             .select("conv_id", "turn_idx", "epoch", "suppress_thresh"))
 
 
 def _q_correlate_xbit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_correlated_df(spark, sf_dir)
-            .filter(F.col("sid").isin(6000006, 6000007))
+    return (_matched(spark, sf_dir, "", 6000006, 6000007)
             .select("conv_id", "turn_idx", "sid", "xbit_pass"))
 
 
 def _q_enrich_classtype(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sagan_spark.enrich import enrich_alerts
-    m = _matches_df(spark, sf_dir)
-    return (enrich_alerts(m, spark, _ruleset())
+    return (enrich_alerts(_run(spark, sf_dir, "").correlated, spark,
+                          _corpus(""))
             .select("conv_id", "turn_idx", "sid", "classtype", "class_desc",
                     F.col("pri").cast("int").alias("pri")))
 
@@ -497,50 +417,28 @@ def _q_enrich_classtype(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_correlate_flexbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: flexbit set → isset by_src pair with 3-day expiry
     (flexbit-mmap.c:745-1467 set, 104-116 isset-by_src)."""
-    from sagan_spark.correlate import run_correlate
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _flex_ruleset()
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    corr = run_correlate(run_match(parsed, rs), rs)
-    return (corr.filter(F.col("sid").isin(6100001, 6100002))
+    return (_matched(spark, sf_dir, "flexbit", 6100001, 6100002)
             .select("conv_id", "turn_idx", "sid", "flexbit_pass"))
 
 
 def _q_flexbit_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: flexbit count gt comparator (flexbit-mmap.c:671-744) — passes
     once any store entry exists for the source."""
-    from sagan_spark.correlate import run_correlate
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _flex_ruleset()
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    corr = run_correlate(run_match(parsed, rs), rs)
-    return (corr.filter(F.col("sid") == 6100003)
+    return (_matched(spark, sf_dir, "flexbit", 6100003)
             .select("conv_id", "turn_idx", "flexbit_pass"))
 
 
 def _q_intel_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: zeek-intel ADDR + DOMAIN membership gates
     (engine.c:1396-1459)."""
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _gates_ruleset()
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    return (run_match(parsed, rs)
-            .filter(F.col("sid").isin(6200001, 6200003))
+    return (_matched(spark, sf_dir, "gates", 6200001, 6200003)
             .select("conv_id", "turn_idx", "sid", "ip_src"))
 
 
 def _q_geoip_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6: country_code interval-table gate (geoip.c:93-206,
     engine.c:1161-1225)."""
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _gates_ruleset()
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    return (run_match(parsed, rs)
-            .filter(F.col("sid") == 6200002)
+    return (_matched(spark, sf_dir, "gates", 6200002)
             .select("conv_id", "turn_idx", "ip_src"))
 
 
@@ -548,49 +446,43 @@ def _q_match_facility_quirk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2 + last-present-gate-wins quirk (engine.c:401-485): G5 carries
     both program: and facility:; only the facility set gates (role in
     user|tool), the program glob is ignored."""
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _gates_ruleset()
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    return (run_match(parsed, rs)
-            .filter(F.col("sid") == 6200005)
+    return (_matched(spark, sf_dir, "gates", 6200005)
             .select("conv_id", "turn_idx", "role"))
 
 
 def _q_match_level_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4 syslog_level gate (engine.c:441-455) over the role column."""
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _gates_ruleset()
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    return (run_match(parsed, rs)
-            .filter(F.col("sid") == 6200006)
+    return (_matched(spark, sf_dir, "gates", 6200006)
             .select("conv_id", "turn_idx", "role"))
 
 
 def _q_match_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 content negation (rules.c '!' modifier): positive substring
     present AND negated substring absent."""
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _gates_ruleset()
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    return (run_match(parsed, rs)
-            .filter(F.col("sid") == 6200007)
+    return (_matched(spark, sf_dir, "gates", 6200007)
             .select("conv_id", "turn_idx", "text"))
+
+
+def _ipkeys(spark: SparkSession, sf_dir: str, sid: int) -> DataFrame:
+    """Correlated rows of the IP-keyed corpus — parse_src_ip keys give
+    every cluster a store key instead of conv_id (the reference's primary
+    deployment mode, after.c:108-110 hashes extracted addresses)."""
+    from sagan_spark.correlate import cluster_modes
+    assert "store" in cluster_modes(_corpus("ipkeys")).values()
+    return _matched(spark, sf_dir, "ipkeys", sid)
 
 
 def _q_correlate_after_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 on extracted-IP keys (after.c:108-110): the after fold keyed by
     parse_src_ip addresses that recur across conversations."""
-    return (_ip_correlated_df(spark, sf_dir).filter(F.col("sid") == 6400001)
+    return (_ipkeys(spark, sf_dir, 6400001)
             .select("conv_id", "turn_idx", "epoch", "ip_src",
                     "suppress_after"))
 
 
 def _q_correlate_threshold_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 on extracted-IP keys (threshold.c:118-123 rolling anchor)."""
-    return (_ip_correlated_df(spark, sf_dir).filter(F.col("sid") == 6400002)
+    return (_ipkeys(spark, sf_dir, 6400002)
             .select("conv_id", "turn_idx", "epoch", "ip_src",
                     "suppress_thresh"))
 
@@ -598,7 +490,7 @@ def _q_correlate_threshold_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_correlate_xbit_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 with track ip_pair on extracted src (xbit-mmap.c:88-91), keyed
     by the xbit track value."""
-    return (_ip_correlated_df(spark, sf_dir).filter(F.col("sid") == 6400003)
+    return (_ipkeys(spark, sf_dir, 6400003)
             .select("conv_id", "turn_idx", "xbit_pass"))
 
 
@@ -607,18 +499,8 @@ def _q_correlate_flexbit_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and src, including the exact-tally overcount quirk: one src live from
     TWO conversations (two store entries) makes isset FAIL
     (flexbit-mmap.c:116-318,637)."""
-    return (_ip_correlated_df(spark, sf_dir).filter(F.col("sid") == 6400005)
+    return (_ipkeys(spark, sf_dir, 6400005)
             .select("conv_id", "turn_idx", "flexbit_pass"))
-
-
-def _dual_ruleset():
-    from sagan_spark.rules.compiler import compile_ruleset
-    return compile_ruleset(
-        'alert syslog any any -> any any (msg:"dual track"; '
-        'content:"connection from"; parse_src_ip: 1; '
-        "after: track by_src, count 1, seconds 604800; "
-        "threshold: type limit, track by_dst, count 1, seconds 604800; "
-        "classtype:misc-attack; sid:6500001; rev:1;)")
 
 
 def _q_correlate_dual_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,40 +511,24 @@ def _q_correlate_dual_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries two state keys, so the rule's cluster folds as one serial
     group, on the same single plan as every other ruleset, batch and
     streaming alike (test_stream_dual_track_equal_batch)."""
-    from sagan_spark.correlate import cluster_modes, run_correlate
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _dual_ruleset()
-    assert cluster_modes(rs) == {0: "serial"}
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    corr = run_correlate(run_match(parsed, rs), rs)
-    return corr.select("conv_id", "turn_idx", "epoch",
-                       "suppress_after", "suppress_thresh")
+    from sagan_spark.correlate import cluster_modes
+    assert cluster_modes(_corpus("dual")) == {0: "serial"}
+    return _run(spark, sf_dir, "dual").correlated.select(
+        "conv_id", "turn_idx", "epoch", "suppress_after", "suppress_thresh")
 
 
 def _q_normalize_liblognorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 with a VERBATIM liblognorm v1 rulebase (%field:type% samples,
     the DSL src/liblognormalize.c:64-104 loads): auto-detected and
     translated at load, extraction via the batched regex path."""
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    from sagan_spark.rules.compiler import compile_ruleset_from_dir
-    rs = compile_ruleset_from_dir(os.path.join(REPO, "rules-entry",
-                                               "normalize"))
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    return (run_match(parsed, rs)
+    return (_run(spark, sf_dir, "normalize").correlated
             .select("conv_id", "turn_idx", "sid", "ip_src", "username"))
 
 
 def _q_blacklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: CIDR blacklist membership on src OR dst
     (processors/blacklist.c:244-297)."""
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _gates_ruleset()
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    return (run_match(parsed, rs)
-            .filter(F.col("sid") == 6200004)
+    return (_matched(spark, sf_dir, "gates", 6200004)
             .select("conv_id", "turn_idx", "ip_src"))
 
 
@@ -738,24 +604,22 @@ def _q_embedded_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_enrich_references(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/J3 wired into the alert sink: sorted Xref URL block
     (references.c:141-209) + generator message (gen-msg.c:132-148)."""
-    res = _pipeline_res(spark, sf_dir)
-    return (res.alerts.filter(F.col("sid").isin(6000001, 6000004))
+    return (_run(spark, sf_dir, "").alerts
+            .filter(F.col("sid").isin(6000001, 6000004))
             .select("conv_id", "turn_idx", "sid", "ref_urls", "gen_msg"))
 
 
 def _q_fast_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2: one-line Snort fast format (fast.c:46-80)."""
     from sagan_spark.route import fast_sink
-    res = _pipeline_res(spark, sf_dir)
-    return fast_sink(res.correlated, _ruleset())
+    return fast_sink(_run(spark, sf_dir, "").correlated, _corpus(""))
 
 
 def _q_unified2_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5: unified2 record fields as a typed routed table
     (unified2.c:140-175)."""
     from sagan_spark.route import unified2_sink
-    res = _pipeline_res(spark, sf_dir)
-    return unified2_sink(res.correlated, _ruleset())
+    return unified2_sink(_run(spark, sf_dir, "").correlated, _corpus(""))
 
 
 _TRACK_TIMEOUT = 43200   # 12h — half the 3-day correlation horizon
@@ -775,15 +639,9 @@ def _q_dynamic_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1-in-5 md5 sample) → one detection alert for the first trigger →
     the hot-loaded ruleset's matches over the batch
     (dynamic-rules.c:58-182)."""
-    from sagan_spark.dynamic import run_pipeline_dynamic
-    from sagan_spark.rules.compiler import compile_ruleset_from_dir
-    root = os.path.join(REPO, "rules-entry", "dynamic")
-    rs = compile_ruleset_from_dir(root)
-    res, det, _names = run_pipeline_dynamic(
-        spark, _transcripts(spark, sf_dir), rs, rules_root=root,
-        sample_rate=5)
-    detect = det.select("conv_id", "turn_idx", "sid",
-                        F.lit("detect").alias("kind"))
+    res = _run(spark, sf_dir, "dynamic")
+    detect = res.detections.select("conv_id", "turn_idx", "sid",
+                                   F.lit("detect").alias("kind"))
     loaded = (res.alerts.filter(F.col("sid") == 6300002)
               .select("conv_id", "turn_idx", "sid",
                       F.lit("loaded").alias("kind")))
@@ -795,9 +653,8 @@ def _q_eve_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     (json-handler.c:258-322, engine.c:1662-1668)."""
     from sagan_spark.parse import parse_transcripts, split_ignored
     from sagan_spark.route import eve_log_sink
-    rs = _ruleset()
     parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    kept, _ = split_ignored(parsed, rs.ignore_list)
+    kept, _ = split_ignored(parsed, _corpus("").ignore_list)
     return eve_log_sink(kept).select(
         "conv_id", "turn_idx", "event_type", "text")
 
@@ -890,12 +747,12 @@ def _q_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_match_offset_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_matches_df(spark, sf_dir).filter(F.col("sid") == 6000010)
+    return (_matched(spark, sf_dir, "", 6000010)
             .select("conv_id", "turn_idx", "sid"))
 
 
 def _q_flow_targeting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_matches_df(spark, sf_dir).filter(F.col("sid") == 6000011)
+    return (_matched(spark, sf_dir, "", 6000011)
             .select("conv_id", "turn_idx", "ip_src",
                     F.col("src_port").cast("int").alias("src_port")))
 
@@ -994,8 +851,8 @@ def _q_perfmon(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sagan_spark.parse import parse_transcripts
     from sagan_spark.route import perfmon_report
     parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    res = _pipeline_res(spark, sf_dir)
-    return perfmon_report(parsed, res.correlated, interval_sec=21600)
+    return perfmon_report(parsed, _run(spark, sf_dir, "").correlated,
+                          interval_sec=21600)
 
 
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1024,8 +881,7 @@ def _q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_eve_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sagan_spark.pipeline import to_eve_json
-    res = _pipeline_res(spark, sf_dir)
-    return to_eve_json(res.eve_alerts)
+    return to_eve_json(_run(spark, sf_dir, "").eve_alerts)
 
 
 # ---------------------------------------------------------------------------

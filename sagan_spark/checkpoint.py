@@ -9,12 +9,14 @@ alert, eve_alert and drop sinks to ``<out>/unit=<k>/<sink>`` (overwritten
 whole if a unit reruns).
 
 A completed unit appends
-  (run_id, unit, status, counters, wall_sec, finished_ts)
+  (run_id, unit, n_units, status, counters, wall_sec, finished_ts)
 to ``<out>/_checkpoint/lineage/`` (parquet), where ``counters`` is the
 unit's full counter row.  A rerun skips the units listed there and
 returns the counters summed over every completed unit, so a run killed
 and resumed ends with the one-shot run's counter row and the union of
-its sink rows — restart-safe exactly-once at unit granularity.
+its sink rows — restart-safe exactly-once at unit granularity.  A rerun
+asking for another unit count is refused: its units would overlap the
+recorded ones.
 
 That holds only while every correlation store is keyed by conv_id
 (``correlate.cluster_modes`` is ``conv`` for every cluster), so no state
@@ -32,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .correlate import cluster_modes, state_groups
 from .pipeline import run_job
 
-LINEAGE_SCHEMA = ("run_id string, unit int, status string, "
+LINEAGE_SCHEMA = ("run_id string, unit int, n_units int, status string, "
                   "counters map<string, bigint>, wall_sec double, "
                   "finished_ts string")
 
@@ -59,21 +61,28 @@ def unit_column(df: DataFrame, n_units: int) -> DataFrame:
         .cast("int"))
 
 
-def completed_units(spark: SparkSession,
-                    checkpoint_dir: str) -> dict[int, dict]:
-    """unit → the counter row its lineage recorded, for completed units."""
+def completed_units(spark: SparkSession, checkpoint_dir: str,
+                    n_units: int) -> dict[int, dict]:
+    """unit → the counter row its lineage recorded, for completed units.
+    Raises ValueError if any was split with another unit count."""
     path = os.path.join(checkpoint_dir, "lineage")
     if not os.path.exists(path):
         return {}
-    df = spark.read.parquet(path).filter(F.col("status") == "done")
-    return {r["unit"]: r["counters"]
-            for r in df.select("unit", "counters").collect()}
+    rows = (spark.read.parquet(path).filter(F.col("status") == "done")
+            .select("unit", "n_units", "counters").collect())
+    other = sorted({r["n_units"] for r in rows} - {n_units})
+    if other:
+        raise ValueError(
+            f"the checkpoint holds units of a split into {other} units; "
+            f"a resume into {n_units} units would sum overlapping units")
+    return {r["unit"]: r["counters"] for r in rows}
 
 
 def record_unit(spark: SparkSession, checkpoint_dir: str, run_id: str,
-                unit: int, counters: dict, wall_sec: float) -> None:
+                unit: int, n_units: int, counters: dict,
+                wall_sec: float) -> None:
     path = os.path.join(checkpoint_dir, "lineage")
-    row = [(run_id, unit, "done", counters, wall_sec,
+    row = [(run_id, unit, n_units, "done", counters, wall_sec,
             time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))]
     spark.createDataFrame(row, LINEAGE_SCHEMA).write.mode("append") \
         .parquet(path)
@@ -87,7 +96,7 @@ def run_with_checkpoint(spark: SparkSession, transcripts: DataFrame,
     row summed over every completed unit."""
     require_conv_keyed(ruleset)
     ckpt = os.path.join(out_dir, "_checkpoint")
-    done = completed_units(spark, ckpt)
+    done = completed_units(spark, ckpt, n_units)
     summary = {"units_total": n_units, "units_skipped": len(done)}
     df = unit_column(transcripts, n_units)
     for unit in range(n_units):
@@ -97,7 +106,8 @@ def run_with_checkpoint(spark: SparkSession, transcripts: DataFrame,
         part = df.filter(F.col("unit") == unit).drop("unit")
         done[unit] = run_job(spark, part, ruleset,
                              os.path.join(out_dir, f"unit={unit}"))
-        record_unit(spark, ckpt, run_id, unit, done[unit], time.time() - t0)
+        record_unit(spark, ckpt, run_id, unit, n_units, done[unit],
+                    time.time() - t0)
     for counters in done.values():
         for k, v in counters.items():
             summary[k] = summary.get(k, 0) + v

@@ -58,6 +58,19 @@ def split_dynamic(ruleset: RuleSet) -> tuple[RuleSet, RuleSet]:
     return (replace(ruleset, rules=normal), replace(ruleset, rules=dyn))
 
 
+def require_no_dynamic(ruleset: RuleSet) -> None:
+    """Raise ValueError if any rule carries ``dynamic_load``: such a rule
+    runs only on sampled rows and loads its ruleset on a hit
+    (engine.c:396), which only ``run_pipeline_dynamic`` does — matched as
+    an ordinary rule it would alert on every hit and load nothing."""
+    sids = sorted(r.sid for r in ruleset.rules if r.dynamic_load)
+    if sids:
+        raise ValueError(
+            f"sids {sids} carry dynamic_load; run the ruleset through "
+            "run_pipeline_dynamic, which samples them and loads what they "
+            "name")
+
+
 def detect_dynamic(parsed: DataFrame, dyn_rs: RuleSet,
                    sample_rate: int) -> DataFrame:
     """Pass 1: dynamic-detection matches over the sampled rows, plus the
@@ -79,7 +92,8 @@ def run_pipeline_dynamic(spark: SparkSession, transcripts: DataFrame,
                          sample_rate: int = 5):
     """Full dynamic flow: detect → load → merged pass 2.
 
-    Returns (PipelineResult, detection_alerts_df, loaded_names)."""
+    Returns (PipelineResult, detection_alerts_df, loaded_names); the
+    result's ``detections`` is detection_alerts_df too."""
     from .pipeline import run_pipeline
 
     base_rs, dyn_rs = split_dynamic(ruleset)
@@ -104,4 +118,5 @@ def run_pipeline_dynamic(spark: SparkSession, transcripts: DataFrame,
     # the detection frame rides the result's unpersist() lifecycle so
     # long-lived sessions don't accumulate cached partitions per call
     res.persisted.append(det)
+    res.detections = detection_alerts
     return res, detection_alerts, loaded_names

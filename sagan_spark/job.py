@@ -60,7 +60,8 @@ def main(argv=None) -> int:
                     for path in args.input.split(",")
                     for r, _, fs in os.walk(path) for f in fs)
         split = min(128 * 1024 * 1024,
-                    max(2 * 1024 * 1024, total // (4 * (args.cores or 8))))
+                    max(2 * 1024 * 1024,
+                        total // (4 * spark.sparkContext.defaultParallelism)))
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     ruleset = compile_ruleset_from_dir(args.rules)
     if args.input:

@@ -3,8 +3,7 @@ route (SURVEY §3.4).
 
 The plan, stage by stage:
 
-  read transcripts (parquet / Iceberg when available; bucket(conv_id)
-      partition spec at scale)
+  read transcripts (any table; bucket(conv_id) partition spec at scale)
     → PARSE      sentinel-fill + epoch           [narrow, codegen]
     → IGNORE     drop-list filter                [narrow, codegen; the
                   pushdown-friendly first filter, sagan.c:1228-1248]
@@ -29,6 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from .correlate import run_correlate
+from .dynamic import require_no_dynamic
 from .enrich import attach_gen_msg, attach_references, enrich_alerts
 from .match import run_match
 from .parse import ignore_condition, parse_transcripts, split_ignored
@@ -51,6 +51,7 @@ class PipelineResult:
     counters: DataFrame
     correlated: DataFrame   # pre-route, for inspection/metrics
     persisted: list = None  # frames this run persisted (for unpersist())
+    detections: DataFrame = None   # dynamic-rule detection alerts
 
     def unpersist(self) -> None:
         """Release exactly the frames this pipeline persisted — callers'
@@ -63,6 +64,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
                  ruleset: RuleSet) -> PipelineResult:
     from pyspark import StorageLevel
 
+    require_no_dynamic(ruleset)
     parsed = parse_transcripts(transcripts)
     kept, dropped = split_ignored(parsed, ruleset.ignore_list)
     matches = run_match(kept, ruleset)

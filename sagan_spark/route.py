@@ -41,17 +41,17 @@ def _excluding(df: DataFrame, sids: list[int]) -> DataFrame:
     return df.filter(~F.col("sid").isin(sids)) if sids else df
 
 
-def alert_sink(correlated: DataFrame, ruleset=None) -> DataFrame:
-    noalert = [r.sid for r in ruleset.rules if r.noalert] if ruleset else []
+def alert_sink(correlated: DataFrame, ruleset) -> DataFrame:
+    noalert = [r.sid for r in ruleset.rules if r.noalert]
     return (_excluding(emitted(correlated), noalert)
             .withColumn("gid", F.lit(GID).cast("long"))
             .select(*ALERT_COLUMNS))
 
 
-def eve_alert_sink(correlated: DataFrame, ruleset=None) -> DataFrame:
+def eve_alert_sink(correlated: DataFrame, ruleset) -> DataFrame:
     """EVE alert projection (field list json-handler.c:113-216).  Kept as
     typed columns; ``to_eve_json`` renders the JSON string form."""
-    noeve = [r.sid for r in ruleset.rules if r.noeve] if ruleset else []
+    noeve = [r.sid for r in ruleset.rules if r.noeve]
     return (_excluding(emitted(correlated), noeve)
             .withColumn("gid", F.lit(GID).cast("long"))
             .select(
@@ -100,7 +100,7 @@ def to_eve_json(eve_alerts: DataFrame) -> DataFrame:
 _PROTO_NUM = {"icmp": 1, "tcp": 6, "udp": 17}   # IP protocol numbers
 
 
-def fast_sink(correlated: DataFrame, ruleset=None) -> DataFrame:
+def fast_sink(correlated: DataFrame, ruleset) -> DataFrame:
     """K2 — the one-line Snort "fast" format
     (src/output-plugins/fast.c:46-80): ``MM/DD/YYYY-HH:MM:SS.uuuuuu
     [**] [gid:sid:rev] msg [**] [Classification: class] [Priority: p]
@@ -108,7 +108,7 @@ def fast_sink(correlated: DataFrame, ruleset=None) -> DataFrame:
     CreateTimeString type-0 (src/util-time.c:49-64, UTC session);
     Event->class is the classtype shortname (cf. the strcmp against
     s_shortname in unified2.c:155-159)."""
-    noalert = [r.sid for r in ruleset.rules if r.noalert] if ruleset else []
+    noalert = [r.sid for r in ruleset.rules if r.noalert]
     e = (_excluding(emitted(correlated), noalert)
          .withColumn("gid", F.lit(GID).cast("long")))
     proto_up = F.upper("proto")
@@ -130,21 +130,18 @@ def fast_sink(correlated: DataFrame, ruleset=None) -> DataFrame:
     return e.select("conv_id", "turn_idx", line.alias("fast_line"))
 
 
-def unified2_sink(correlated: DataFrame, ruleset=None) -> DataFrame:
+def unified2_sink(correlated: DataFrame, ruleset) -> DataFrame:
     """K5 — the unified2 alert record as a typed routed table (SURVEY
     §2.1: skip the binary format, keep the field set of
     src/output-plugins/unified2.c:140-175): sensor/epoch/µs, sig triple,
     classification_id = 1-based position in classification.config load
     order (unified2.c:151-159), priority, addresses, ports, IP protocol
     number, blocked flag from the drop action."""
-    cls_ids = []
-    if ruleset:
-        cls_ids = [(name, i + 1)
-                   for i, name in enumerate(ruleset.classifications)]
-    id_map = (F.create_map(
-        *[F.lit(x) for pair in cls_ids for x in pair])
-        if cls_ids else None)
-    has_id_map = id_map is not None
+    cls_ids = [(name, i + 1)
+               for i, name in enumerate(ruleset.classifications)]
+    class_id = (F.coalesce(F.create_map(
+        *[F.lit(x) for pair in cls_ids for x in pair])[F.col("classtype")],
+        F.lit(0)) if cls_ids else F.lit(0))
     e = emitted(correlated)
     proto_num = F.coalesce(
         F.create_map(*[F.lit(x) for kv in _PROTO_NUM.items() for x in kv])
@@ -158,8 +155,7 @@ def unified2_sink(correlated: DataFrame, ruleset=None) -> DataFrame:
         F.lit(GID).cast("long").alias("generator_id"),
         F.col("sid").alias("signature_id"),
         F.col("rev").alias("signature_revision"),
-        (F.coalesce(id_map[F.col("classtype")], F.lit(0)) if has_id_map
-         else F.lit(0)).cast("int").alias("classification_id"),
+        class_id.cast("int").alias("classification_id"),
         F.col("pri").alias("priority_id"),
         F.col("ip_src").alias("ip_source"),
         F.col("ip_dst").alias("ip_destination"),
@@ -236,7 +232,7 @@ def drop_sink(dropped: DataFrame) -> DataFrame:
 
 
 def sink_counts(correlated: DataFrame, parsed: DataFrame,
-                ignore_cond, ruleset=None) -> DataFrame:
+                ignore_cond, ruleset) -> DataFrame:
     """The counter block (src/sagan.h:194-345, stats.c:109-114):
     one aggregate row.  saganfound counts gated matches pre-suppression
     (engine.c:1543); after_total counts after-rule fires (after.c:147);
@@ -245,7 +241,7 @@ def sink_counts(correlated: DataFrame, parsed: DataFrame,
     The received/processed/ignored triple is ONE conditional aggregation
     pass over the parsed frame (map-side partial agg) — not separate
     kept/dropped scans, which would each recompute the upstream."""
-    noalert = [r.sid for r in ruleset.rules if r.noalert] if ruleset else []
+    noalert = [r.sid for r in ruleset.rules if r.noalert]
     gated = correlated.filter(F.col("xbit_pass") & F.col("flexbit_pass"))
     is_emitted = ~F.col("suppress_after") & ~F.col("suppress_thresh")
     agg = gated.agg(

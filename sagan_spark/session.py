@@ -35,17 +35,15 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(id(spark))
 
 
-def get_spark(app: str = "sagan_spark", cores: int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app: str = "sagan_spark",
+              cores: int | None = None) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
-    if shuffle_partitions is None:
-        shuffle_partitions = max(int(cores), 8)
     builder = (
         SparkSession.builder
         .master(f"local[{cores}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(int(cores), 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

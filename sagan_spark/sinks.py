@@ -1,5 +1,4 @@
-"""Sink writer abstraction: Iceberg when the runtime has the Iceberg Spark
-extension, parquet otherwise (this sandbox ships no Iceberg jars).
+"""Sink writer: parquet clustered by ``bucket(conv_id)``.
 
 At cluster scale the intended DDL (SURVEY §3.4) is::
 
@@ -8,53 +7,34 @@ At cluster scale the intended DDL (SURVEY §3.4) is::
     PARTITIONED BY (bucket(64, conv_id), days(ts))
 
 which gives partition pruning on both the correlation key and time.  The
-parquet fallback keeps the same layout via ``partitionBy`` on a bucket
-column so the physical file layout matches what the Iceberg spec would
-produce.
+parquet writer keeps the bucket layout with a ``bucket`` column that
+clusters rows into files the way the Iceberg bucket transform would.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Schema  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
-def write_sink(df: DataFrame, path_or_table: str,
-               bucket_col: str | None = "conv_id", n_buckets: int = 128,
-               mode: str = "overwrite") -> None:
-    spark = df.sparkSession
-    if iceberg_available(spark) and "/" not in path_or_table:
-        (df.writeTo(path_or_table).using("iceberg")
-         .createOrReplace())
-        return
-    if bucket_col and bucket_col in df.columns:
-        # cluster rows by bucket(conv_id) with ONE shuffle — the parquet
-        # analog of Iceberg's bucket transform.  (A directory
-        # partitionBy("bucket") would write tasks×buckets small files and
-        # sort per task — measurably slower and worse to scan.)
-        #
-        # The bucket VALUE keeps the fixed n_buckets modulus (Iceberg
-        # bucket(N, col) is a value transform — pruning key stability);
-        # the WRITE width adapts to the session's parallelism, capped at
-        # n_buckets.  A fixed 128-way shuffle cost each sink ~128 tiny
-        # write tasks per job regardless of executor size — measured as
-        # the dominant per-job fixed cost in the N-vs-4N scaling bench
-        # (3 sinks × 128 tasks ≈ 15 s of a 21 s near-empty pass on a
-        # 2-core executor).  On a real cluster defaultParallelism far
-        # exceeds n_buckets, so the width stays 128 there.
-        width = min(n_buckets,
-                    2 * df.sparkSession.sparkContext.defaultParallelism)
-        df = df.withColumn(
-            "bucket", F.pmod(F.xxhash64(F.col(bucket_col)),
-                             F.lit(n_buckets)).cast("int"))
-        (df.repartition(width, F.col("bucket"))
-         .write.mode(mode).parquet(path_or_table))
-    else:
-        df.write.mode(mode).parquet(path_or_table)
+def write_sink(df: DataFrame, path: str, n_buckets: int = 128) -> None:
+    # cluster rows by bucket(conv_id) with ONE shuffle — the parquet
+    # analog of Iceberg's bucket transform.  (A directory
+    # partitionBy("bucket") would write tasks×buckets small files and
+    # sort per task — measurably slower and worse to scan.)
+    #
+    # The bucket VALUE keeps the fixed n_buckets modulus (Iceberg
+    # bucket(N, col) is a value transform — pruning key stability);
+    # the WRITE width adapts to the session's parallelism, capped at
+    # n_buckets.  A fixed 128-way shuffle cost each sink ~128 tiny
+    # write tasks per job regardless of executor size — measured as
+    # the dominant per-job fixed cost in the N-vs-4N scaling bench
+    # (3 sinks × 128 tasks ≈ 15 s of a 21 s near-empty pass on a
+    # 2-core executor).  On a real cluster defaultParallelism far
+    # exceeds n_buckets, so the width stays 128 there.
+    width = min(n_buckets,
+                2 * df.sparkSession.sparkContext.defaultParallelism)
+    df = df.withColumn(
+        "bucket", F.pmod(F.xxhash64(F.col("conv_id")),
+                         F.lit(n_buckets)).cast("int"))
+    (df.repartition(width, F.col("bucket"))
+     .write.mode("overwrite").parquet(path))

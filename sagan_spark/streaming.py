@@ -15,7 +15,11 @@ named pipe, /root/reference/src/sagan.c:1142-1345) re-expressed as:
                             backfilled source cannot lose event-time-live
                             entries unless the group itself goes
                             wall-clock silent)
-      → ROUTE              (foreachBatch fan-out to the same sinks)
+
+The result is the correlated stream (CORR_SCHEMA).  Routing is the
+caller's: write the stream to any streaming sink and apply the batch
+sink builders (route.alert_sink, eve_alert_sink, sink_counts) to what it
+wrote.
 
 Watermark note: the reference has NO event-time semantics — correlation
 windows use wall-clock arrival (after.c:63-80).  The batch engine made
@@ -59,6 +63,7 @@ from .correlate import (
     with_default_flags,
 )
 from .datagen import TRANSCRIPTS_SCHEMA
+from .dynamic import require_no_dynamic
 from .match import run_match
 from .parse import parse_transcripts, split_ignored
 from .rules.compiler import RuleSet
@@ -200,9 +205,10 @@ def read_transcript_stream(spark, path: str, max_files: int = 10):
 def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
                      state_timeout_ms: int | None = None,
                      late_rows=None):
-    """transcripts stream → correlated alert stream (CORR_SCHEMA rows that
-    survive suppression are the emit set; filtering/enrichment happens in
-    the sink's foreachBatch).
+    """transcripts stream → correlated stream (CORR_SCHEMA; the rows that
+    pass the gates and survive suppression, ``route.emitted``, are the
+    emit set — routing and enrichment are the caller's).  Rulesets with
+    ``dynamic_load`` rules are refused (``dynamic.require_no_dynamic``).
 
     ``state_timeout_ms=None`` (default) derives the eviction timeout from
     the ruleset's largest window (default_state_timeout_ms); pass 0 to
@@ -213,6 +219,7 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
     which event-time eviction is exact) are tallied into it, so backfill
     deeper than one horizon is observable instead of silently consulting
     pruned state.  Pass ``spark.sparkContext.accumulator(0)``."""
+    require_no_dynamic(ruleset)
     if state_timeout_ms is None:
         state_timeout_ms = default_state_timeout_ms(ruleset)
     parsed = parse_transcripts(transcripts_stream)

@@ -9,7 +9,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 @pytest.fixture(scope="session")
 def spark():
     from sagan_spark.session import get_spark
-    s = get_spark("sagan_spark_tests", cores=4, shuffle_partitions=8)
+    s = get_spark("sagan_spark_tests", cores=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -1,12 +1,10 @@
-"""Persist lifecycle of the driver-entry memoization caches: repeated
-driver queries in one session must not accumulate cached frames (the
-round-3 leak left correlate-internal MEMORY_AND_DISK frames behind; the
-single correlate plan persists nothing itself, so every persisted frame
-belongs to a cache that clear_entry_caches releases).
+"""Persist lifecycle of the entry module's one memo, ``_run``: every query
+over a rules corpus reads that corpus's one pipeline run, and
+``clear_entry_caches`` releases every frame the module persisted.
 
-The assertion is a DELTA check (no persisted RDDs beyond those present
-before the queries ran) so the test is robust to other session tests
-holding their own caches.
+The persisted-RDD assertions are DELTA checks (against the persisted RDDs
+present before the queries ran) so the tests are robust to other session
+tests holding their own caches.
 """
 
 from __future__ import annotations
@@ -20,6 +18,13 @@ import __spark_entry__ as entry  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
+# rules corpus → two queries that read its memoized run
+SIBLINGS = {
+    "": ("pipeline_alerts", "match_content_ip"),
+    "gates": ("intel_gate", "blacklist_gate"),
+    "ipkeys": ("correlate_after_ip", "correlate_xbit_pair"),
+}
+
 
 def _persisted_ids(spark) -> set[int]:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -27,46 +32,61 @@ def _persisted_ids(spark) -> set[int]:
 
 
 def test_entry_queries_release_all_persists(spark):
+    entry.clear_entry_caches()
     before = _persisted_ids(spark)
     qs = entry.queries()
-    # one conv-keyed pipeline consumer, two consumers of the memoized
-    # IP-keyed frame and the un-memoized dual-track query; counts force
+    # queries over six corpora, dynamic_rules among them; counts force
     # materialization
-    for name in ("pipeline_alerts", "correlate_after_ip",
-                 "correlate_xbit_pair", "correlate_dual_ip"):
+    for name in ("pipeline_alerts", "correlate_flexbit", "intel_gate",
+                 "correlate_after_ip", "correlate_dual_ip",
+                 "dynamic_rules"):
         qs[name](spark, SF).count()
-    # the caches themselves hold persisted frames while live (that's the
-    # point — the 4 IP queries share ONE correlated frame) ...
-    assert entry._IP_CORR_CACHE, "memoization never engaged"
+    assert len(entry._RUNS) == 6, "memoization never engaged"
+    assert _persisted_ids(spark) - before
     entry.clear_entry_caches()
-    # ... and releasing them leaves nothing behind
     leaked = _persisted_ids(spark) - before
     assert not leaked, f"persisted RDDs leaked: {leaked}"
 
 
-def test_ip_correlated_df_memoized(spark):
+def test_corpus_siblings_share_one_run(spark, monkeypatch):
+    """Two queries over one corpus build its pipeline once and add exactly
+    one persisted RDD (the correlated frame they both read)."""
+    import sagan_spark.pipeline as pl
+
     entry.clear_entry_caches()
-    a = entry._ip_correlated_df(spark, SF)
-    b = entry._ip_correlated_df(spark, SF)
-    assert a is b
+    builds = []
+    real = pl.run_pipeline
+
+    def counting(*args):
+        builds.append(args[2])
+        return real(*args)
+
+    monkeypatch.setattr(pl, "run_pipeline", counting)
+    qs = entry.queries()
+    for corpus, names in SIBLINGS.items():
+        before = _persisted_ids(spark)
+        for name in names:
+            qs[name](spark, SF).count()
+        assert len(_persisted_ids(spark) - before) == 1, corpus
+    assert len(builds) == len(SIBLINGS)
     entry.clear_entry_caches()
 
 
 def test_cache_keyed_by_application_id_and_evicts_dead(spark):
-    """Cache keys use the context's applicationId (unique per context
-    lifetime — id(spark) can be REUSED by CPython after a session is
-    GC'd, handing a new session a stale frame bound to a dead context),
-    and entries whose session has stopped are evicted on access."""
-    assert entry._cache_key(spark, SF) == (
-        spark.sparkContext.applicationId, SF)
+    """Keys use the context's applicationId (unique per context lifetime —
+    id(spark) can be REUSED by CPython after a session is GC'd, handing a
+    new session a stale frame bound to a dead context), and entries whose
+    session has stopped are evicted on access."""
+    entry.clear_entry_caches()
 
     class DeadSession:
         @property
         def sparkContext(self):
             raise RuntimeError("SparkContext was stopped")
 
-    entry._IP_CORR_CACHE[("app-dead", SF)] = (DeadSession(), object())
-    live = entry._ip_correlated_df(spark, SF)   # access runs eviction
-    assert ("app-dead", SF) not in entry._IP_CORR_CACHE
-    assert live is entry._ip_correlated_df(spark, SF)
+    entry._RUNS[("app-dead", SF, "gates")] = (DeadSession(), object())
+    live = entry._run(spark, SF, "gates")   # access runs eviction
+    assert list(entry._RUNS) == [
+        (spark.sparkContext.applicationId, SF, "gates")]
+    assert live is entry._run(spark, SF, "gates")
     entry.clear_entry_caches()

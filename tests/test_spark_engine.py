@@ -521,7 +521,7 @@ def test_dynamic_rule_loading(spark):
 
 
 def test_write_sink_bucketed_layout(spark, tmp_path):
-    """sinks.write_sink parquet fallback: rows cluster by
+    """sinks.write_sink: rows cluster by
     bucket(conv_id) into n_buckets files — the Iceberg bucket-transform
     analog (one shuffle, not tasks x buckets small files)."""
     import glob
@@ -776,6 +776,49 @@ def test_checkpoint_rejects_ip_keyed(spark, tmp_path):
     for r in rs.rules:
         assert str(r.sid) in str(err.value)
     assert not out.exists()
+
+
+def test_checkpoint_rejects_other_unit_count(spark, tmp_path):
+    """Resuming a complete 2-unit run with 3 units would skip units of the
+    old split and sum them with units of the new one; it is refused,
+    naming both counts, before any unit runs."""
+    import os
+
+    from sagan_spark.checkpoint import run_with_checkpoint
+
+    df = spark_df_from_rows(spark, gen_rows(20))
+    rs = compile_ruleset_from_dir("rules-fixtures")
+    out = str(tmp_path / "ck")
+    run_with_checkpoint(spark, df, rs, out, "runA", n_units=2)
+    with pytest.raises(ValueError, match=r"\[2\].*3 units"):
+        run_with_checkpoint(spark, df, rs, out, "runB", n_units=3)
+    assert not os.path.exists(os.path.join(out, "unit=2"))
+
+
+def test_dynamic_load_rejected_outside_dynamic_pipeline(spark, tmp_path):
+    """A dynamic_load rule matched as an ordinary rule would alert on every
+    hit and load nothing: run_pipeline (so run_job) and streaming_alerts
+    refuse the ruleset, naming its detector sids."""
+    import os
+
+    from sagan_spark.pipeline import run_job
+    from sagan_spark.streaming import read_transcript_stream, streaming_alerts
+
+    rs = compile_ruleset_from_dir(
+        os.path.join(os.path.dirname(__file__), "..", "rules-entry",
+                     "dynamic"))
+    df = spark_df_from_rows(spark, _rows_from(
+        {"c1": [(0, "stage1 marker cmd=alpha", 0)]}))
+    with pytest.raises(ValueError, match=r"sids \[6300001\]"):
+        run_pipeline(spark, df, rs)
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="dynamic_load"):
+        run_job(spark, df, rs, str(out))
+    assert not out.exists()
+    src = str(tmp_path / "src")
+    df.write.parquet(src)
+    with pytest.raises(ValueError, match=r"sids \[6300001\]"):
+        streaming_alerts(spark, read_transcript_stream(spark, src), rs)
 
 
 def test_ipkeys_corpus_equals_oracle(spark):
