@@ -306,10 +306,10 @@ def _run(spark: SparkSession, sf_dir: str, corpus: str):
         from sagan_spark.pipeline import run_pipeline
         rs, t = _corpus(corpus), _transcripts(spark, sf_dir)
         if corpus == "dynamic":
-            res = run_pipeline_dynamic(
+            res, _ = run_pipeline_dynamic(
                 spark, t, rs, rules_root=os.path.join(REPO, "rules-entry",
                                                       corpus),
-                sample_rate=5)[0]
+                sample_rate=5)
         else:
             res = run_pipeline(spark, t, rs)
         _RUNS[key] = (spark, res)
@@ -1309,14 +1309,14 @@ FROM m
 """
 
 
-def _ann_lsh_oracle(n_bands: int = 8, band_bits: int = 4, dim: int = 64,
-                    k: int = 5) -> str:
-    """Exact LSH-ANN reconstruction: the sin-based hyperplanes are
-    generated by the SAME Python function as the Spark query and inlined
-    as repr'd double literals, so bucket assignment and rerank are
-    engine-identical."""
-    from sagan_spark.functions.similarity import _hyperplanes
-    planes = _hyperplanes(dim, n_bands * band_bits)
+def _band_sql(dim: int = 64) -> str:
+    """The vb rows (vec_id, band, bucket) of similarity._banded: the
+    sin-based hyperplanes are generated by the SAME Python function as the
+    Spark query and inlined as repr'd double literals, so bucket
+    assignment is engine-identical."""
+    from sagan_spark.functions.similarity import (BAND_BITS, N_BANDS,
+                                                  _hyperplanes)
+    planes = _hyperplanes(dim, N_BANDS * BAND_BITS)
 
     def arr(p):
         return "[" + ", ".join(repr(x) for x in p) + "]"
@@ -1324,16 +1324,22 @@ def _ann_lsh_oracle(n_bands: int = 8, band_bits: int = 4, dim: int = 64,
     def bucket_expr(b):
         # Spark folds bits MSB-first: bucket = ((b0*2+b1)*2+b2)*2+b3
         terms = []
-        for i in range(band_bits):
+        for i in range(BAND_BITS):
             bit = (f"(CASE WHEN list_dot_product(emb, "
-                   f"{arr(planes[b * band_bits + i])}) >= 0 "
+                   f"{arr(planes[b * BAND_BITS + i])}) >= 0 "
                    f"THEN 1 ELSE 0 END)")
-            terms.append(f"{bit} * {2 ** (band_bits - 1 - i)}")
+            terms.append(f"{bit} * {2 ** (BAND_BITS - 1 - i)}")
         return " + ".join(terms)
 
-    band_sel = "\nUNION ALL\n".join(
+    return "\nUNION ALL\n".join(
         f"SELECT vec_id, {b} AS band, {bucket_expr(b)} AS bucket FROM v"
-        for b in range(n_bands))
+        for b in range(N_BANDS))
+
+
+def _ann_lsh_oracle(dim: int = 64, k: int = 5) -> str:
+    """Exact LSH-ANN reconstruction: the banding of ``_band_sql``, then
+    the same candidate union and rerank."""
+    band_sel = _band_sql(dim)
     return f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
            FROM embeddings),
@@ -1360,30 +1366,12 @@ SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= {k}
 _ORACLES["ann_lsh"] = _ann_lsh_oracle()
 
 
-def _cosine_dup_oracle(n_bands: int = 8, band_bits: int = 4, dim: int = 64,
-                       threshold: float = 0.30) -> str:
-    """Exact reconstruction of cosine_dup_pairs: identical sin-based
-    hyperplanes inlined as double literals; candidates = id pairs sharing
-    a band bucket; verify on the 6-digit-rounded cosine (same rounding
-    point as the Spark side, so the threshold cut is bit-identical)."""
-    from sagan_spark.functions.similarity import _hyperplanes
-    planes = _hyperplanes(dim, n_bands * band_bits)
-
-    def arr(p):
-        return "[" + ", ".join(repr(x) for x in p) + "]"
-
-    def bucket_expr(b):
-        terms = []
-        for i in range(band_bits):
-            bit = (f"(CASE WHEN list_dot_product(emb, "
-                   f"{arr(planes[b * band_bits + i])}) >= 0 "
-                   f"THEN 1 ELSE 0 END)")
-            terms.append(f"{bit} * {2 ** (band_bits - 1 - i)}")
-        return " + ".join(terms)
-
-    band_sel = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {b} AS band, {bucket_expr(b)} AS bucket FROM v"
-        for b in range(n_bands))
+def _cosine_dup_oracle(dim: int = 64, threshold: float = 0.30) -> str:
+    """Exact reconstruction of cosine_dup_pairs: the banding of
+    ``_band_sql``; candidates = id pairs sharing a band bucket; verify on
+    the 6-digit-rounded cosine (same rounding point as the Spark side, so
+    the threshold cut is bit-identical)."""
+    band_sel = _band_sql(dim)
     return f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
            FROM embeddings),

@@ -92,8 +92,8 @@ def run_pipeline_dynamic(spark: SparkSession, transcripts: DataFrame,
                          sample_rate: int = 5):
     """Full dynamic flow: detect → load → merged pass 2.
 
-    Returns (PipelineResult, detection_alerts_df, loaded_names); the
-    result's ``detections`` is detection_alerts_df too."""
+    Returns (PipelineResult, loaded_names); the result's ``detections``
+    holds the detection alerts."""
     from .pipeline import run_pipeline
 
     base_rs, dyn_rs = split_dynamic(ruleset)
@@ -112,11 +112,10 @@ def run_pipeline_dynamic(spark: SparkSession, transcripts: DataFrame,
         seen_sids |= {r.sid for r in new}
         merged = replace(merged, rules=merged.rules + new)
     res = run_pipeline(spark, transcripts, merged)
-    detection_alerts = (det.filter(F.col("first_trigger"))
-                        .select("conv_id", "turn_idx", "sid", "ip_src",
-                                "ip_dst", "msg", "classtype"))
     # the detection frame rides the result's unpersist() lifecycle so
     # long-lived sessions don't accumulate cached partitions per call
     res.persisted.append(det)
-    res.detections = detection_alerts
-    return res, detection_alerts, loaded_names
+    res.detections = (det.filter(F.col("first_trigger"))
+                      .select("conv_id", "turn_idx", "sid", "ip_src",
+                              "ip_dst", "msg", "classtype"))
+    return res, loaded_names

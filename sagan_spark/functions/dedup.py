@@ -19,6 +19,11 @@ Scale design:
   self-join on shingle + group count); quadratic in bucket size, used as
   the verifier and the small-scale oracle-comparable path.
 
+Both Jaccard operators verify through ``_verified_jaccard``.  No operator
+here persists a frame: a frame read by several branches of one plan is
+computed once per action through Spark's exchange reuse, and a cache
+nothing unpersists would outlive the call.
+
 Shingles are word n-grams; the shingle hash basis is
 ``conv(substr(md5(s),1,8),16,10)`` — stable across engines (DuckDB
 computes the identical value), unlike xxhash64/Spark-hash.
@@ -82,20 +87,14 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
             .select("doc_id", "canonical_id", "group_sz"))
 
 
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
-                        threshold: float = 0.8) -> DataFrame:
-    """Exact all-pairs n-gram Jaccard ≥ threshold.
-    |A∩B| via shingle self-join + count; |A∪B| = |A|+|B|-|A∩B|.
-    Output: (doc_a, doc_b, jaccard) with doc_a < doc_b."""
-    sh = word_shingles(df, text_col, n).cache()
+def _verified_jaccard(sh: DataFrame, shared: DataFrame,
+                      threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the pairs of ``shared`` — one
+    (doc_a, doc_b) row per shingle the two docs share — whose exact
+    shingle-set Jaccard |A∩B| / (|A|+|B|-|A∩B|), rounded to 6, is
+    >= threshold; the set sizes are counted in ``sh`` (doc_id, shingle)."""
+    inter = shared.groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter"))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (a.join(b, (F.col("a.shingle") == F.col("b.shingle")) &
-                    (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-             .agg(F.count("*").alias("inter")))
     sa = sizes.select(F.col("doc_id").alias("doc_a"),
                       F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"),
@@ -106,6 +105,19 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
                 (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
             .filter(F.col("jaccard") >= threshold)
             .select("doc_a", "doc_b", "jaccard"))
+
+
+def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
+                        threshold: float = 0.8) -> DataFrame:
+    """Exact all-pairs n-gram Jaccard ≥ threshold: |A∩B| via the shingle
+    self-join.  Output: (doc_a, doc_b, jaccard) with doc_a < doc_b."""
+    sh = word_shingles(df, text_col, n)
+    a, b = sh.alias("a"), sh.alias("b")
+    shared = (a.join(b, (F.col("a.shingle") == F.col("b.shingle")) &
+                     (F.col("a.doc_id") < F.col("b.doc_id")))
+              .select(F.col("a.doc_id").alias("doc_a"),
+                      F.col("b.doc_id").alias("doc_b")))
+    return _verified_jaccard(sh, shared, threshold)
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
@@ -127,8 +139,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
-                      threshold: float = 0.8,
-                      persist_shingles: bool = True) -> DataFrame:
+                      threshold: float = 0.8) -> DataFrame:
     """MinHash LSH candidates (band buckets → equi-join) verified by exact
     Jaccard.  Exact-equal to the all-pairs result at the threshold, with
     LSH pruning doing the scale work.
@@ -153,13 +164,11 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
       candidate join is an equi-join on (band, bucket), the exact-verify
       join touches candidate pairs only.
 
-    ``persist_shingles`` caches the exploded representative-shingle frame
-    (read 3×: signatures, verify-a, verify-b) plus the small collapse
-    frames (reps, members).  At extreme corpus sizes where the exploded
-    shingles (~10× the text bytes) would thrash the disk cache, pass
-    False to trade two extra tokenizer scans for zero spill."""
-    from pyspark import StorageLevel
-
+    Nothing is persisted: the representative shingles feed the
+    signatures, both verify sides and the set sizes, and ``reps`` feeds
+    the shingles and the members map, but each is one plan subtree that
+    Spark's exchange reuse computes once per action (``ReusedExchange``
+    in the plan) — so a call leaves no cached frame behind."""
     # --- exact-duplicate collapse ---------------------------------
     keyed = df.select(F.col("doc_id"),
                       F.col(text_col).alias("__mh_text"),
@@ -167,20 +176,14 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
     reps = (keyed.groupBy("fp")
             .agg(F.min("doc_id").alias("doc_id"),
                  F.min_by("__mh_text", "doc_id").alias("__mh_text")))
-    if persist_shingles:
-        reps = reps.persist(StorageLevel.MEMORY_AND_DISK)
     # cluster map: representative id per input doc (join on the 32-char
     # fingerprint, never the text)
     members = (keyed.select("fp", "doc_id")
                .join(reps.select("fp", F.col("doc_id").alias("rid")), "fp")
                .select("rid", "doc_id"))
-    if persist_shingles:
-        members = members.persist(StorageLevel.MEMORY_AND_DISK)
     rep_docs = reps.select("doc_id", F.col("__mh_text").alias(text_col))
 
     sh = word_shingles(rep_docs, text_col, n)
-    if persist_shingles:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     sigs = minhash_signatures(rep_docs, text_col, n, shingles=sh)
     bands = sigs.select(
         "doc_id",
@@ -200,21 +203,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
                 F.col("y.doc_id").alias("doc_b"))
         .distinct())
     # exact verify: compute true Jaccard only for candidates
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (cand.join(a, "doc_a").join(b, ["doc_b", "shingle"])
-             .groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter")))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("sz").alias("sz_b"))
-    rep_pairs = (inter.join(sa, "doc_a").join(sb, "doc_b")
-                 .withColumn("jaccard", F.round(
-                     F.col("inter") /
-                     (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
-                 .filter(F.col("jaccard") >= threshold)
-                 .select("doc_a", "doc_b", "jaccard"))
+    rep_pairs = _verified_jaccard(
+        sh, cand.join(a, "doc_a").join(b, ["doc_b", "shingle"]), threshold)
 
     # --- re-expand duplicate clusters -----------------------------
     # cross-cluster: every member of a × every member of b carries the
@@ -228,8 +220,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
                      F.greatest("ma_id", "mb_id").alias("doc_b"),
                      "jaccard"))
     # within-cluster: Jaccard 1.0 by construction; clusters whose rep has
-    # no shingles (empty normalized text) never pair, like the raw path
-    nonempty = sizes.select(F.col("doc_id").alias("rid"))
+    # no shingles (empty normalized text, hence no signature) never pair,
+    # like the raw path
+    nonempty = sigs.select(F.col("doc_id").alias("rid"))
     w1 = members.select("rid", F.col("doc_id").alias("doc_a"))
     w2 = members.select("rid", F.col("doc_id").alias("doc_b"))
     within = (w1.join(w2, "rid")

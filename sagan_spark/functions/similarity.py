@@ -15,15 +15,23 @@
   force in pytest.
 * **cosine_dup_pairs** — embedding-cosine near-duplicate pairs for the
   dedup family: LSH-banded candidate self-join + exact-cosine verify.
+
+Both LSH operators band the same way (``_banded``): ``N_BANDS`` bands of
+``BAND_BITS`` sign bits each, as JVM codegen expressions that the static
+DuckDB oracles re-derive bit for bit.  All three top-k operators rank
+through ``_top``.
 """
 
 from __future__ import annotations
 
 import math
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window, functions as F
+
+# the one LSH banding: every caller uses it, and the DuckDB oracles of
+# ann_lsh and cosine_dup rebuild their buckets from these two constants
+N_BANDS = 8
+BAND_BITS = 4
 
 
 def _dot(a, b):
@@ -42,6 +50,17 @@ def with_cosine(df: DataFrame, a_col: str, b_col: str,
     a, b = F.col(a_col), F.col(b_col)
     return df.withColumn(
         out, F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6))
+
+
+def _top(scored: DataFrame, k: int, by: str = "query_id",
+         tie: str = "neighbor_id",
+         keep=("query_id", "neighbor_id", "cosine", "rank")) -> DataFrame:
+    """The ``keep`` columns of the rows of ``scored`` ranked 1..k per
+    ``by`` on (cosine desc, ``tie`` asc); ``rank`` is that rank."""
+    w = Window.partitionBy(by).orderBy(F.col("cosine").desc(),
+                                       F.col(tie).asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k).select(*keep))
 
 
 def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
@@ -71,12 +90,7 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     v = vectors.select(F.col(id_col).alias("neighbor_id"),
                        F.col(vec_col).alias("v_emb"))
     pairs = v.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-    scored = with_cosine(pairs, "q_emb", "v_emb")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank"))
+    return _top(with_cosine(pairs, "q_emb", "v_emb"), k)
 
 
 def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
@@ -86,47 +100,39 @@ def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
             for p in range(n_planes)]
 
 
+def _banded(df: DataFrame, emb: str, dim: int) -> DataFrame:
+    """``df`` exploded to one row per band, with its ``band`` index and
+    ``bucket``: the sign bits of ``emb`` against the band's BAND_BITS
+    hyperplanes, folded MSB-first."""
+    planes = _hyperplanes(dim, N_BANDS * BAND_BITS)
+    cols = []
+    for b in range(N_BANDS):
+        bits = None
+        for p in planes[b * BAND_BITS:(b + 1) * BAND_BITS]:
+            arr = F.array(*[F.lit(x) for x in p])
+            bit = F.when(_dot(F.col(emb), arr) >= 0, 1).otherwise(0)
+            bits = bit if bits is None else bits * 2 + bit
+        cols.append(F.struct(F.lit(b).alias("band"), bits.alias("bucket")))
+    return (df.select("*", F.explode(F.array(*cols)).alias("bb"))
+            .select(*df.columns, "bb.band", "bb.bucket"))
+
+
 def lsh_ann_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
                  vec_col: str = "embedding", id_col: str = "vec_id",
-                 dim: int = 64, n_bands: int = 8,
-                 band_bits: int = 4) -> DataFrame:
-    """Random-hyperplane LSH: signature = sign bits vs n_bands*band_bits
+                 dim: int = 64) -> DataFrame:
+    """Random-hyperplane LSH: signature = sign bits vs N_BANDS*BAND_BITS
     hyperplanes; candidates = pairs sharing any band; exact cosine rerank
     → top-k (may differ from brute force only when a true neighbor shares
     no band — recall measured in tests)."""
-    planes = _hyperplanes(dim, n_bands * band_bits)
-
-    def band_cols(emb):
-        cols = []
-        for b in range(n_bands):
-            bits = None
-            for i in range(band_bits):
-                p = planes[b * band_bits + i]
-                arr = F.array(*[F.lit(x) for x in p])
-                bit = F.when(_dot(emb, arr) >= 0, 1).otherwise(0)
-                bits = bit if bits is None else bits * 2 + bit
-            cols.append(F.struct(F.lit(b).alias("band"),
-                                 bits.alias("bucket")))
-        return F.array(*cols)
-
-    v = vectors.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("v_emb"),
-                       F.explode(band_cols(F.col(vec_col))).alias("bb")
-                       ).select("neighbor_id", "v_emb", "bb.band", "bb.bucket")
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("q_emb"),
-                       F.explode(band_cols(F.col(vec_col))).alias("bb")
-                       ).select("query_id", "q_emb", "bb.band", "bb.bucket")
+    v = _banded(vectors.select(F.col(id_col).alias("neighbor_id"),
+                               F.col(vec_col).alias("v_emb")), "v_emb", dim)
+    q = _banded(queries.select(F.col(id_col).alias("query_id"),
+                               F.col(vec_col).alias("q_emb")), "q_emb", dim)
     cand = (v.join(F.broadcast(q), ["band", "bucket"])
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .select("query_id", "q_emb", "neighbor_id", "v_emb")
             .distinct())
-    scored = with_cosine(cand, "q_emb", "v_emb")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank"))
+    return _top(with_cosine(cand, "q_emb", "v_emb"), k)
 
 
 def _vec_key(col):
@@ -139,63 +145,9 @@ def _vec_key(col):
     return F.xxhash64(col)
 
 
-def derive_band_bits(n: int) -> int:
-    """Scale-adaptive band width for cosine_dup_pairs.  Random
-    (non-duplicate) vectors collide in a band with probability
-    2**-band_bits, so the candidate self-join carries
-    ~ n_bands * n**2 / 2**(band_bits+1) random pairs.  Keeping that load
-    LINEAR in n needs 2**band_bits ~ n, i.e. band_bits = log2(n) - c;
-    c = 3 puts the load at ~ 4 * n_bands * n pairs.  (log2(n)/2 — the
-    round-3 rule — only tames it to ~n**1.5, which is 3.6e8 candidate
-    pairs at 200k vectors: measured TIMEOUT in scale_smoke.)  Wider
-    bands cost recall per band; the caller recovers recall by raising
-    n_bands (recall ≈ 1-(1-p**band_bits)**n_bands for per-bit agreement
-    probability p = 1 - angle/pi), which scales compute linearly instead
-    of quadratically — derive_lsh_params does that jointly."""
-    return max(2, math.ceil(math.log2(max(n, 4))) - 3)
-
-
-def derive_lsh_params(n: int, threshold: float, recall_target: float = 0.9,
-                      max_bands: int = 64) -> tuple[int, int, float]:
-    """Joint (band_bits, n_bands, achieved_recall) for cosine_dup_pairs'
-    auto mode (``band_bits=None``).
-
-    band_bits follows derive_band_bits (keeps the random-collision
-    candidate load LINEAR in the distinct-vector count n).  n_bands is
-    then grown to hold ``recall_target`` for pairs AT the query
-    threshold: a pair at cosine s collides in one band with probability
-    p**band_bits (p = 1 - acos(s)/pi per hyperplane), so
-
-        n_bands = ceil( ln(1-recall_target) / ln(1-p**band_bits) )
-
-    floored at 8 and capped at ``max_bands`` — beyond the cap, plane
-    compute and candidate volume grow faster than recall.  When the cap
-    binds, the returned achieved_recall < recall_target is the
-    documented RECALL FLOOR of the auto path at that scale: borderline
-    pairs (cosine ≈ threshold) are found with that probability, while
-    higher-similarity pairs converge to certainty (p → 1) and exact
-    duplicates are found always (the collapse catches them before
-    banding)."""
-    band_bits = derive_band_bits(n)
-    s = min(max(threshold, -1.0), 1.0)
-    p = 1.0 - math.acos(s) / math.pi
-    pb = p ** band_bits
-    if pb >= 1.0:
-        need = 1
-    elif pb <= 1e-12:
-        need = max_bands
-    else:
-        need = math.ceil(math.log(1.0 - recall_target) /
-                         math.log(1.0 - pb))
-    n_bands = min(max(8, need), max_bands)
-    achieved = 1.0 - (1.0 - pb) ** n_bands
-    return band_bits, n_bands, achieved
-
-
 def cosine_dup_pairs(vectors: DataFrame, threshold: float = 0.30,
                      vec_col: str = "embedding", id_col: str = "vec_id",
-                     dim: int = 64, n_bands: int = 8,
-                     band_bits: int | None = 4) -> DataFrame:
+                     dim: int = 64) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS (the dedup-family sibling of
     lsh_ann_topk): candidates are id pairs sharing >= 1 random-hyperplane
     band bucket — a bucketed SELF-join, never an all-pairs product — then
@@ -203,24 +155,17 @@ def cosine_dup_pairs(vectors: DataFrame, threshold: float = 0.30,
 
     Returns (id_a, id_b, cosine) with id_a < id_b, cosine rounded to 6.
 
-    Scale shape, two layers:
-
-    * **Exact-duplicate collapse first.**  A web-scale corpus carries
-      heavy exact duplication (the sf10 table: 200k rows, 2,000 distinct
-      vectors, 100-member clusters).  LSH over raw rows self-joins every
-      cluster in EVERY band — 8.4e9 candidate pairs measured at sf10 —
-      so candidates are generated over DISTINCT vectors only; duplicate
-      clusters re-expand afterwards (their pair volume is the data's own
-      duplication, i.e. the answer, not wasted candidate work).
-    * **Band width grows with the distinct count.**  Random vectors
-      spread over 2**band_bits buckets per band → candidate load
-      ~ n_bands * D**2 / 2**(band_bits+1) for D distinct vectors; see
-      derive_band_bits for the log2(D)-based rule.  The 4-bit default
-      suits distinct counts up to ~50k; pass ``band_bits=None`` to
-      derive BOTH band_bits AND n_bands jointly (derive_lsh_params —
-      n_bands then holds a 0.9 recall target at the threshold, capped
-      at 64 bands; one extra count action) — the explicit ``n_bands``
-      argument is ignored in that mode."""
+    Scale shape: exact-duplicate collapse first.  A web-scale corpus
+    carries heavy exact duplication (the sf10 table: 200k rows, 2,000
+    distinct vectors, 100-member clusters).  LSH over raw rows
+    self-joins every cluster in EVERY band — 8.4e9 candidate pairs
+    measured at sf10 — so candidates are generated over DISTINCT vectors
+    only, banded as lsh_ann_topk bands; duplicate clusters re-expand
+    afterwards (their pair volume is the data's own duplication, i.e.
+    the answer, not wasted candidate work).  Random vectors spread over
+    2**BAND_BITS buckets per band, so the candidate load is
+    ~ N_BANDS * D**2 / 2**(BAND_BITS+1) = D**2 / 4 for D distinct
+    vectors, which suits corpora of up to ~50k distinct vectors."""
     vv = vectors.select(F.col(id_col).alias("vid"),
                         F.col(vec_col).alias("emb"))
     # collapse exact dupes to a representative id per distinct vector.
@@ -246,51 +191,8 @@ def cosine_dup_pairs(vectors: DataFrame, threshold: float = 0.30,
     members = (joined.filter(eq).select(F.col("rid"), F.col("vid"))
                .unionByName(mism.select("emb", "vid")
                             .join(mreps, "emb").select("rid", "vid")))
-    if band_bits is None:
-        band_bits, n_bands, _ = derive_lsh_params(reps.count(), threshold)
-    planes = _hyperplanes(dim, n_bands * band_bits)
 
-    def band_cols(emb):
-        cols = []
-        for b in range(n_bands):
-            bits = None
-            for i in range(band_bits):
-                p = planes[b * band_bits + i]
-                arr = F.array(*[F.lit(x) for x in p])
-                bit = F.when(_dot(emb, arr) >= 0, 1).otherwise(0)
-                bits = bit if bits is None else bits * 2 + bit
-            cols.append(F.struct(F.lit(b).alias("band"),
-                                 bits.alias("bucket")))
-        return F.array(*cols)
-
-    if n_bands * band_bits <= 48:
-        # few planes: JVM-side codegen expressions (and bit-stable with
-        # the static DuckDB oracle that re-derives the same planes)
-        bucketed = reps.select(
-            "vid", "emb", F.explode(band_cols(F.col("emb"))).alias("bb"))
-    else:
-        # scale path (derived band_bits ~ log2 D): hundreds of nested
-        # aggregate expressions blow past codegen limits and fall back
-        # to interpreted eval — one Arrow-batched numpy matmul computes
-        # every plane sign at once instead
-        import numpy as np
-        P = np.asarray(planes, dtype=np.float64)        # (planes, dim)
-        w = (1 << np.arange(band_bits - 1, -1, -1)).astype(np.int64)
-
-        @F.pandas_udf("array<int>")
-        def bucket_vec(emb: pd.Series) -> pd.Series:
-            E = np.stack(emb.to_numpy())                # (n, dim)
-            bits = (E @ P.T) >= 0                       # (n, planes)
-            bk = bits.reshape(len(E), n_bands, band_bits) @ w
-            return pd.Series(list(bk.astype(np.int32)))
-
-        bucketed = (reps.select(
-            "vid", "emb",
-            F.posexplode(bucket_vec(F.col("emb"))).alias("band", "bucket"))
-            .select("vid", "emb",
-                    F.struct("band", "bucket").alias("bb")))
-
-    v = bucketed.select("vid", "emb", "bb.band", "bb.bucket")
+    v = _banded(reps, "emb", dim)
     a = v.select(F.col("vid").alias("rid_a"), F.col("emb").alias("a_emb"),
                  "band", "bucket")
     b = v.select(F.col("vid").alias("rid_b"), F.col("emb").alias("b_emb"),
@@ -355,26 +257,14 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     v = vectors.select(F.col(id_col).alias("neighbor_id"),
                        F.col(vec_col).alias("v_emb"))
     # assign each vector to nearest seed (broadcast seeds)
-    assign_w = Window.partitionBy("neighbor_id").orderBy(
-        F.col("cosine").desc(), F.col("cell").asc())
-    assigned = (with_cosine(v.crossJoin(F.broadcast(seeds)),
-                            "v_emb", "c_emb")
-                .withColumn("rn", F.row_number().over(assign_w))
-                .filter(F.col("rn") == 1)
-                .select("neighbor_id", "v_emb", "cell"))
+    assigned = _top(with_cosine(v.crossJoin(F.broadcast(seeds)),
+                                "v_emb", "c_emb"), 1, "neighbor_id", "cell",
+                    keep=("neighbor_id", "v_emb", "cell"))
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("q_emb"))
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cell").asc())
-    probes = (with_cosine(q.crossJoin(F.broadcast(seeds)), "q_emb", "c_emb")
-              .withColumn("rn", F.row_number().over(probe_w))
-              .filter(F.col("rn") <= nprobe)
-              .select("query_id", "q_emb", "cell"))
+    probes = _top(with_cosine(q.crossJoin(F.broadcast(seeds)),
+                              "q_emb", "c_emb"), nprobe, tie="cell",
+                  keep=("query_id", "q_emb", "cell"))
     cand = (assigned.join(F.broadcast(probes), "cell")
             .filter(F.col("neighbor_id") != F.col("query_id")))
-    scored = with_cosine(cand, "q_emb", "v_emb")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rank"))
+    return _top(with_cosine(cand, "q_emb", "v_emb"), k)

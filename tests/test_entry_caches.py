@@ -1,6 +1,7 @@
 """Persist lifecycle of the entry module's one memo, ``_run``: every query
 over a rules corpus reads that corpus's one pipeline run, and
-``clear_entry_caches`` releases every frame the module persisted.
+``clear_entry_caches`` releases every frame the module persisted; queries
+outside the memo (the dedup operators) persist nothing.
 
 The persisted-RDD assertions are DELTA checks (against the persisted RDDs
 present before the queries ran) so the tests are robust to other session
@@ -35,11 +36,11 @@ def test_entry_queries_release_all_persists(spark):
     entry.clear_entry_caches()
     before = _persisted_ids(spark)
     qs = entry.queries()
-    # queries over six corpora, dynamic_rules among them; counts force
-    # materialization
+    # queries over six corpora, dynamic_rules among them, and the two
+    # shingle-Jaccard dedup queries; counts force materialization
     for name in ("pipeline_alerts", "correlate_flexbit", "intel_gate",
                  "correlate_after_ip", "correlate_dual_ip",
-                 "dynamic_rules"):
+                 "dynamic_rules", "ngram_jaccard", "minhash_lsh"):
         qs[name](spark, SF).count()
     assert len(entry._RUNS) == 6, "memoization never engaged"
     assert _persisted_ids(spark) - before

@@ -192,67 +192,6 @@ def test_cosine_dup_pairs_subset_of_bruteforce(vecs):
     assert len(mine) / len(truth) >= 0.6  # banding recall floor
 
 
-def test_derive_band_bits_scales_with_corpus():
-    """The auto-derived band width must satisfy band_bits >= log2(|V|)/2
-    (similarity.py's own scale rule: random-collision candidates grow
-    ~n_bands*|V|^2/2^(band_bits+1), so narrower bands go quadratic) —
-    including at the sf10 corpus size (200k vectors) whose pinned-4-bit
-    variant TIMEOUTed in the round-3 scale smoke."""
-    import math
-    from sagan_spark.functions.similarity import derive_band_bits
-    for n in (1_000, 50_000, 200_000, 10_000_000):
-        assert derive_band_bits(n) >= math.log2(n) / 2
-    assert derive_band_bits(200_000) >= 9
-
-
-def test_cosine_dup_pairs_auto_band_bits(vecs):
-    """band_bits=None derives (band_bits, n_bands) jointly, still
-    verifies exactly (no false positives) AND holds recall: at this
-    corpus size the derived plan's closed-form recall at the threshold
-    is ~1 (derive_lsh_params targets 0.9), so the auto path must find
-    ≥ 0.9 of the true pairs — the round-4 advice gap (precision-only
-    testing hid an n_bands-stuck-at-8 recall collapse)."""
-    import numpy as np
-    from sagan_spark.functions.similarity import cosine_dup_pairs
-    got = cosine_dup_pairs(vecs, threshold=0.9, dim=16,
-                           band_bits=None).collect()
-    data = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-            for r in vecs.collect()}
-    truth = set()
-    for i in data:
-        for j in data:
-            if i < j:
-                c = round(float(np.dot(data[i], data[j]) /
-                                (np.linalg.norm(data[i]) *
-                                 np.linalg.norm(data[j]))), 6)
-                if c >= 0.9:
-                    truth.add((i, j))
-    mine = set()
-    for r in got:
-        a, b = data[r["id_a"]], data[r["id_b"]]
-        c = round(float(np.dot(a, b) /
-                        (np.linalg.norm(a) * np.linalg.norm(b))), 6)
-        assert c >= 0.9 and r["id_a"] < r["id_b"]
-        mine.add((r["id_a"], r["id_b"]))
-    assert truth and len(mine & truth) / len(truth) >= 0.9
-
-
-def test_derive_lsh_params_recall_target_and_floor():
-    """n_bands is derived JOINTLY with band_bits: where the 64-band cap
-    does not bind, closed-form recall at the threshold meets the 0.9
-    target; where it binds (huge corpus × low threshold) the achieved
-    recall is RETURNED as the documented floor instead of silently
-    running the 8-band default."""
-    import math
-    from sagan_spark.functions.similarity import derive_lsh_params
-    bb, nb, rec = derive_lsh_params(50_000, 0.8)
-    assert 8 <= nb <= 64 and rec >= 0.9
-    bb, nb, rec = derive_lsh_params(200_000, 0.30)
-    assert nb == 64 and 0.0 < rec < 0.9      # cap binds -> honest floor
-    p = 1.0 - math.acos(0.30) / math.pi
-    assert abs(rec - (1.0 - (1.0 - p ** bb) ** nb)) < 1e-9
-
-
 def test_cosine_dup_collapse_collision_safe(vecs, monkeypatch):
     """The exact-duplicate collapse keys its shuffle by xxhash64 of the
     vector (8 bytes on the wire at 100 TB, not the raw array).  A hash

@@ -502,21 +502,21 @@ def test_dynamic_rule_loading(spark):
         f"c{k}": [(0, "stage1 marker boot", k), (1, "stage2 marker go",
                                                  10 + k)]
         for k in range(10)})   # 10 convs → some sampled at rate 2
-    res, det, names = run_pipeline_dynamic(
+    res, names = run_pipeline_dynamic(
         spark, spark_df_from_rows(spark, rows), rs, rules_root=root,
         sample_rate=2)
     assert names == ["loaded"]
-    d = det.toPandas()
+    d = res.detections.toPandas()
     assert len(d) == 1 and d["sid"].iloc[0] == 6300001  # one alert per load
     loaded = res.alerts.filter("sid = 6300002").count()
     assert loaded == 10                                 # whole-batch apply
 
     # no trigger → no load, no detection alert
     rows2 = _rows_from({"c1": [(0, "stage2 marker only", 0)]})
-    res2, det2, names2 = run_pipeline_dynamic(
+    res2, names2 = run_pipeline_dynamic(
         spark, spark_df_from_rows(spark, rows2), rs, rules_root=root,
         sample_rate=2)
-    assert names2 == [] and det2.count() == 0
+    assert names2 == [] and res2.detections.count() == 0
     assert res2.alerts.count() == 0
 
 

@@ -15,10 +15,6 @@ corpus's one memoized pipeline run (``__spark_entry__._run``).  The smoke
 does the same: the first query of each corpus pays the cold build and the
 rest measure the way the gate sees them.
 
-Extras: variants exercising the scale path of a knob the gate pins
-(cosine_dup_auto = band_bits derived from |V| per similarity.py's
-log2(|V|)/2 rule, vs the gate's static-oracle-matching 4-bit pin).
-
 Usage: python tools/scale_smoke.py [sf_dir] [timeout_sec] [name ...]
 Writes BENCH/scale_smoke.json.
 """
@@ -47,27 +43,12 @@ def _commit() -> str:
 # required explanation for any expected non-ok result (the contract)
 EXPLANATIONS: dict[str, str] = {
     "cosine_dup": (
-        "pinned band_bits=4 to match its static DuckDB oracle at gate "
-        "scale; suits up to ~50k DISTINCT vectors (similarity.py doc — "
-        "exact-dup collapse made sf10's 2k-distinct corpus pass even "
-        "pinned); the derived-width scale path is cosine_dup_auto below"),
+        "8 bands x 4 bits, the banding its static DuckDB oracle "
+        "re-derives; random-collision candidates grow ~D**2/4 in the "
+        "DISTINCT vector count D, so it suits up to ~50k distinct vectors "
+        "(similarity.py doc) — the exact-dup collapse made sf10's "
+        "2k-distinct corpus pass"),
 }
-
-
-def _extras(E, spark, sf_dir):
-    """Scale-path variants of gate-pinned queries."""
-    from pyspark.sql import functions as F
-
-    from sagan_spark.functions.similarity import cosine_dup_pairs
-
-    def cosine_dup_auto():
-        E._register(spark, sf_dir)
-        emb = spark.table("embeddings").select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"))
-        return cosine_dup_pairs(emb, threshold=0.30, band_bits=None)
-
-    return {"cosine_dup_auto": cosine_dup_auto}
 
 
 def main() -> int:
@@ -121,10 +102,7 @@ def main() -> int:
         results[name] = r
         print(f"{r['status']:>8} {name}: {r}", flush=True)
 
-    queries = list(E.queries().items())
-    queries += [(n, (lambda s, d, f=f: f()))
-                for n, f in _extras(E, spark, sf_dir).items()]
-    for name, fn in queries:
+    for name, fn in E.queries().items():
         if only and name not in only:
             continue
         measure(name, lambda: fn(spark, sf_dir))
