@@ -852,7 +852,7 @@ def _q_perfmon(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sagan_spark.route import perfmon_report
     parsed = parse_transcripts(_transcripts(spark, sf_dir))
     return perfmon_report(parsed, _run(spark, sf_dir, "").correlated,
-                          interval_sec=21600)
+                          _corpus(""), interval_sec=21600)
 
 
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:

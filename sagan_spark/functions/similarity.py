@@ -14,7 +14,9 @@
   probe the nearest ``nprobe`` cells.  Approximate; recall tested vs brute
   force in pytest.
 * **cosine_dup_pairs** — embedding-cosine near-duplicate pairs for the
-  dedup family: LSH-banded candidate self-join + exact-cosine verify.
+  dedup family: exact duplicates collapse by the raw vector, then an
+  LSH-banded candidate self-join whose pairs travel as ids + an
+  exact-cosine verify over the vectors joined back.
 
 Both LSH operators band the same way (``_banded``): ``N_BANDS`` bands of
 ``BAND_BITS`` sign bits each, as JVM codegen expressions that the static
@@ -47,9 +49,11 @@ def _norm(a):
 
 def with_cosine(df: DataFrame, a_col: str, b_col: str,
                 out: str = "cosine") -> DataFrame:
+    """Cosine rounded to 6 places; NULL when either vector is zero (an
+    ANSI-mode plain divide would fail the whole query instead)."""
     a, b = F.col(a_col), F.col(b_col)
     return df.withColumn(
-        out, F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6))
+        out, F.round(F.try_divide(_dot(a, b), _norm(a) * _norm(b)), 6))
 
 
 def _top(scored: DataFrame, k: int, by: str = "query_id",
@@ -135,16 +139,6 @@ def lsh_ann_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     return _top(with_cosine(cand, "q_emb", "v_emb"), k)
 
 
-def _vec_key(col):
-    """8-byte exact-duplicate collapse key (xxhash64 of the vector): the
-    collapse shuffle carries the hash, not the raw array, at 100 TB.
-    Collision-safe at the call site — cosine_dup_pairs re-checks true
-    vector equality against the representative and re-collapses the
-    (astronomically unlikely) losers by the raw vector; tests force a
-    collision by monkeypatching this to a constant."""
-    return F.xxhash64(col)
-
-
 def cosine_dup_pairs(vectors: DataFrame, threshold: float = 0.30,
                      vec_col: str = "embedding", id_col: str = "vec_id",
                      dim: int = 64) -> DataFrame:
@@ -162,48 +156,36 @@ def cosine_dup_pairs(vectors: DataFrame, threshold: float = 0.30,
     measured at sf10 — so candidates are generated over DISTINCT vectors
     only, banded as lsh_ann_topk bands; duplicate clusters re-expand
     afterwards (their pair volume is the data's own duplication, i.e.
-    the answer, not wasted candidate work).  Random vectors spread over
-    2**BAND_BITS buckets per band, so the candidate load is
+    the answer, not wasted candidate work).  The collapse groups by the
+    raw vector: a hash key would save no wire bytes, since the
+    cluster-map join shuffles the raw vectors anyway.  Candidate pairs
+    are deduplicated as (rid_a, rid_b) ids before the two vectors join
+    back for the cosine.  Random vectors spread over 2**BAND_BITS
+    buckets per band, so the candidate load is
     ~ N_BANDS * D**2 / 2**(BAND_BITS+1) = D**2 / 4 for D distinct
     vectors, which suits corpora of up to ~50k distinct vectors."""
     vv = vectors.select(F.col(id_col).alias("vid"),
                         F.col(vec_col).alias("emb"))
-    # collapse exact dupes to a representative id per distinct vector.
-    # The collapse shuffle is keyed by _vec_key (xxhash64 — 8 bytes on
-    # the wire, not the raw array); min_by's map-side partial ships one
-    # vector per (partition, key).  Hash collisions cannot corrupt the
-    # output: members re-join by the hash and are CHECKED for true
-    # vector equality against the representative — mismatches (a 2**-64
-    # event, forced in tests by monkeypatching _vec_key) re-collapse by
-    # the raw vector, a wide-key shuffle over an almost-always-empty
-    # frame.
-    tagged = vv.withColumn("vkey", _vec_key(F.col("emb")))
-    hreps = tagged.groupBy("vkey").agg(
-        F.min("vid").alias("rid"), F.min_by("emb", "vid").alias("remb"))
-    joined = tagged.join(hreps, "vkey")
-    eq = F.col("emb") == F.col("remb")
-    mism = joined.filter(~eq)
-    mreps = mism.groupBy("emb").agg(F.min("vid").alias("rid"))
-    reps = (hreps.select("rid", F.col("remb").alias("emb"))
-            .unionByName(mreps.select("rid", "emb"))
-            .withColumnRenamed("rid", "vid"))
-    # cluster map: representative id per input id
-    members = (joined.filter(eq).select(F.col("rid"), F.col("vid"))
-               .unionByName(mism.select("emb", "vid")
-                            .join(mreps, "emb").select("rid", "vid")))
+    # one representative id (the least) per distinct vector, and the
+    # cluster map from every input id to its representative
+    reps = vv.groupBy("emb").agg(F.min("vid").alias("rid"))
+    members = vv.join(reps, "emb").select("rid", "vid")
 
-    v = _banded(reps, "emb", dim)
-    a = v.select(F.col("vid").alias("rid_a"), F.col("emb").alias("a_emb"),
-                 "band", "bucket")
-    b = v.select(F.col("vid").alias("rid_b"), F.col("emb").alias("b_emb"),
-                 "band", "bucket")
-    cand = (a.join(b, ["band", "bucket"])
+    # candidates travel as id pairs: the distinct() shuffles two longs
+    # per pair, and the vectors join back only for the verify
+    v = _banded(reps, "emb", dim).select("rid", "band", "bucket")
+    cand = (v.withColumnRenamed("rid", "rid_a")
+            .join(v.withColumnRenamed("rid", "rid_b"), ["band", "bucket"])
             .filter(F.col("rid_a") < F.col("rid_b"))
-            .select("rid_a", "a_emb", "rid_b", "b_emb")
-            .distinct())
+            .select("rid_a", "rid_b")
+            .distinct()
+            .join(reps.select(F.col("rid").alias("rid_a"),
+                              F.col("emb").alias("a_emb")), "rid_a")
+            .join(reps.select(F.col("rid").alias("rid_b"),
+                              F.col("emb").alias("b_emb")), "rid_b"))
     rep_pairs = (with_cosine(cand, "a_emb", "b_emb")
                  .filter(F.col("cosine") >= threshold)
-                 .select("rid_a", "a_emb", "rid_b", "cosine"))
+                 .select("rid_a", "rid_b", "cosine"))
 
     # expand duplicate clusters back to id pairs via the members map.
     # cross-cluster: every member of a × every member of b — the
@@ -216,12 +198,12 @@ def cosine_dup_pairs(vectors: DataFrame, threshold: float = 0.30,
                      F.greatest("ma.vid", "mb.vid").alias("id_b"),
                      "cosine"))
     # within-cluster: all pairs inside one duplicate cluster, cosine of
-    # the vector with itself (rounded like every other pair; NaN for
-    # zero vectors drops the pair, matching the raw self-join)
+    # the vector with itself (rounded like every other pair; a zero
+    # vector's NULL cosine drops the pair, matching the raw self-join)
     w1, w2 = members.alias("w1"), members.alias("w2")
     within = (w1.join(w2, (F.col("w1.rid") == F.col("w2.rid")) &
                       (F.col("w1.vid") < F.col("w2.vid")))
-              .join(reps.withColumnRenamed("vid", "rid"), "rid")
+              .join(reps, "rid")
               .select(F.col("w1.vid").alias("id_a"),
                       F.col("w2.vid").alias("id_b"),
                       F.col("emb").alias("a_emb"),

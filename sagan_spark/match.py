@@ -35,7 +35,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from .extract import DEFAULT_PORT, DEFAULT_PROTO
 from .rules.compiler import RuleSet
 from .rules.model import glob_to_regex
 from .semantics import xbit_track_value
@@ -138,15 +137,6 @@ class _RuleProgram:
             alt = re.compile("|".join(re.escape(a) for a in m.alternatives),
                              flags)
             self.metas.append((_window_bounds(m, prev_depth), alt, m.negated))
-        # rows of a "complex" rule need the per-row extract/flow/gate loop;
-        # everything else (incl. rules that only need correlation keys from
-        # the conv_id fallback) is assembled fully vectorized
-        self.complex = bool(
-            rule.parse_src_ip or rule.parse_dst_ip or rule.parse_port or
-            rule.parse_hash or rule.parse_proto or rule.parse_proto_program
-            or rule.normalize or not rule.head.all_any or rule.blacklist
-            or rule.intel or rule.geoip_track
-            or rule.alert_time is not None)
 
     # -- vectorized predicates ------------------------------------------------
 
@@ -172,7 +162,7 @@ class _RuleProgram:
         for rx in self.pcres:
             if alive.size == 0:
                 return alive
-            alive = alive[masks.regex(rx)[alive]]
+            alive = alive[masks.regex_window(rx, 0, None)[alive]]
         for (start, stop), alt_rx, negated in self.metas:
             if alive.size == 0:
                 return alive
@@ -219,14 +209,6 @@ class _MaskCache:
             else:
                 hit = region.str.contains(pattern, regex=False)
             m = self._cache[key] = hit.to_numpy(dtype=bool, na_value=False)
-        return m
-
-    def regex(self, rx) -> np.ndarray:
-        key = ("r", rx.pattern, rx.flags)
-        m = self._cache.get(key)
-        if m is None:
-            m = self._cache[key] = self.text.str.contains(rx).to_numpy(
-                dtype=bool, na_value=False)
         return m
 
     def regex_window(self, rx, start: int, stop) -> np.ndarray:
@@ -405,7 +387,8 @@ def iter_match_frames(pdf: pd.DataFrame, ruleset: RuleSet,
     tool = pdf["tool"].astype("string").fillna("").astype(str)
     role = pdf["role"].astype("string").fillna("").astype(str)
     all_rows = np.arange(n)
-    ctx: BatchExtract | None = None   # per-batch parse-once cache
+    # per-batch parse-once cache, shared by every rule (SURVEY §2.3 X1)
+    ctx = BatchExtract(text, tool, ruleset.normalize_rulebase)
 
     conv_np = pdf["conv_id"].to_numpy()
     turn_np = pdf["turn_idx"].to_numpy()
@@ -426,50 +409,32 @@ def iter_match_frames(pdf: pd.DataFrame, ruleset: RuleSet,
                                           ("", rule.priority))
         pri = rule.priority or cls[1]
 
-        if prog.complex:
-            # vectorized path: batch extraction + boolean gate masks
-            # (pandas/numpy C loops; the parse-once ctx is shared by all
-            # complex rules in the batch — SURVEY §2.3 X1's "one pass of
-            # a compiled IP+port regex per text batch")
-            if ctx is None:
-                ctx = BatchExtract(text, tool, DEFAULT_PORT,
-                                   ruleset.normalize_rulebase)
-            ex = assemble_extract(rule, ctx, alive, conv_np, tool_np,
-                                  DEFAULT_PORT, DEFAULT_PROTO)
-            mask = np.ones(alive.size, dtype=bool)
-            if not rule.head.all_any:
-                mask &= flow_mask(rule, ctx, ex)
-            if rule.alert_time is not None:
-                mask &= alert_time_mask(rule.alert_time,
-                                        pdf["ts"].iloc[alive])
-            if rule.blacklist:
-                mask &= blacklist_mask(ctx, ex, ruleset.blacklist_ranges)
-            if rule.intel:
-                mask &= intel_mask(rule, ctx, ex, alive,
-                                   ruleset.intel_sets)
-            if rule.geoip_track:
-                mask &= geoip_mask(rule, ctx, ex, ruleset.geoip_ranges)
-            if not mask.any():
-                continue
-            alive = alive[mask]
-            m = int(alive.size)
-            ip_src = ex["ip_src"][mask]
-            src_port = ex["src_port"][mask]
-            ip_dst = ex["ip_dst"][mask]
-            dst_port = ex["dst_port"][mask]
-            proto = ex["proto"][mask]
-            username = ex["username"][mask]
-            hsh = ex["hash"][mask]
-        else:
-            # fully vectorized: fallback addressing only (engine.c:967-1045)
-            m = int(alive.size)
-            ip_src = conv_np[alive]
-            src_port = np.full(m, DEFAULT_PORT, dtype=np.int32)
-            ip_dst = ip_src
-            dst_port = src_port
-            proto = np.full(m, DEFAULT_PROTO, dtype=object)
-            username = np.full(m, "", dtype=object)
-            hsh = np.full(m, "", dtype=object)
+        # every rule's alive rows through the one vectorized extraction
+        # (fallback addressing included, engine.c:967-1045), then only
+        # the gate masks the rule has
+        ex = assemble_extract(rule, ctx, alive, conv_np, tool_np)
+        mask = np.ones(alive.size, dtype=bool)
+        if not rule.head.all_any:
+            mask &= flow_mask(rule, ctx, ex)
+        if rule.alert_time is not None:
+            mask &= alert_time_mask(rule.alert_time, pdf["ts"].iloc[alive])
+        if rule.blacklist:
+            mask &= blacklist_mask(ctx, ex, ruleset.blacklist_ranges)
+        if rule.intel:
+            mask &= intel_mask(rule, ctx, ex, alive, ruleset.intel_sets)
+        if rule.geoip_track:
+            mask &= geoip_mask(rule, ctx, ex, ruleset.geoip_ranges)
+        if not mask.any():
+            continue
+        alive = alive[mask]
+        m = int(alive.size)
+        ip_src = ex["ip_src"][mask]
+        src_port = ex["src_port"][mask]
+        ip_dst = ex["ip_dst"][mask]
+        dst_port = ex["dst_port"][mask]
+        proto = ex["proto"][mask]
+        username = ex["username"][mask]
+        hsh = ex["hash"][mask]
 
         out = {
             "conv_id": conv_np[alive],

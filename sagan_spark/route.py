@@ -28,22 +28,24 @@ ALERT_COLUMNS = [
 ]
 
 
-def emitted(correlated: DataFrame) -> DataFrame:
+def _sent(but_sids: list[int]):
     """Rows that survive xbit/flexbit gating and after/threshold
-    suppression — the Send_Alert set (engine.c:1470-1606)."""
-    return correlated.filter(
-        F.col("xbit_pass") & F.col("flexbit_pass") &
-        ~F.col("suppress_after") & ~F.col("suppress_thresh"))
+    suppression — the Send_Alert set (engine.c:1470-1606) — of every
+    rule but ``but_sids`` (the noalert/noeve flags, output.c:81-93)."""
+    cond = (F.col("xbit_pass") & F.col("flexbit_pass") &
+            ~F.col("suppress_after") & ~F.col("suppress_thresh"))
+    return cond & ~F.col("sid").isin(but_sids) if but_sids else cond
 
 
-def _excluding(df: DataFrame, sids: list[int]) -> DataFrame:
-    """noalert/noeve suppression flags (output.c:81-93 analog)."""
-    return df.filter(~F.col("sid").isin(sids)) if sids else df
+def _is_alert(ruleset):
+    """The one alert predicate, emitted and not a noalert rule: the rows
+    of alert_sink and fast_sink, and the alert_total of sink_counts and
+    perfmon_report."""
+    return _sent([r.sid for r in ruleset.rules if r.noalert])
 
 
 def alert_sink(correlated: DataFrame, ruleset) -> DataFrame:
-    noalert = [r.sid for r in ruleset.rules if r.noalert]
-    return (_excluding(emitted(correlated), noalert)
+    return (correlated.filter(_is_alert(ruleset))
             .withColumn("gid", F.lit(GID).cast("long"))
             .select(*ALERT_COLUMNS))
 
@@ -52,7 +54,7 @@ def eve_alert_sink(correlated: DataFrame, ruleset) -> DataFrame:
     """EVE alert projection (field list json-handler.c:113-216).  Kept as
     typed columns; ``to_eve_json`` renders the JSON string form."""
     noeve = [r.sid for r in ruleset.rules if r.noeve]
-    return (_excluding(emitted(correlated), noeve)
+    return (correlated.filter(_sent(noeve))
             .withColumn("gid", F.lit(GID).cast("long"))
             .select(
                 F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSZ")
@@ -108,8 +110,7 @@ def fast_sink(correlated: DataFrame, ruleset) -> DataFrame:
     CreateTimeString type-0 (src/util-time.c:49-64, UTC session);
     Event->class is the classtype shortname (cf. the strcmp against
     s_shortname in unified2.c:155-159)."""
-    noalert = [r.sid for r in ruleset.rules if r.noalert]
-    e = (_excluding(emitted(correlated), noalert)
+    e = (correlated.filter(_is_alert(ruleset))
          .withColumn("gid", F.lit(GID).cast("long")))
     proto_up = F.upper("proto")
     proto_tag = F.when(F.lower("proto").isin(*_PROTO_NUM), proto_up) \
@@ -142,7 +143,7 @@ def unified2_sink(correlated: DataFrame, ruleset) -> DataFrame:
     class_id = (F.coalesce(F.create_map(
         *[F.lit(x) for pair in cls_ids for x in pair])[F.col("classtype")],
         F.lit(0)) if cls_ids else F.lit(0))
-    e = emitted(correlated)
+    e = correlated.filter(_sent([]))
     proto_num = F.coalesce(
         F.create_map(*[F.lit(x) for kv in _PROTO_NUM.items() for x in kv])
         [F.lower("proto")], F.lit(0))
@@ -197,20 +198,20 @@ def track_client_transitions(parsed: DataFrame,
     return gaps.unionByName(tail)
 
 
-def perfmon_report(parsed: DataFrame, correlated: DataFrame,
+def perfmon_report(parsed: DataFrame, correlated: DataFrame, ruleset,
                    interval_sec: int = 3600) -> DataFrame:
     """A8 — the perfmonitor periodic-counter CSV
     (src/processors/perfmon.c:132-193) as per-interval delta rows:
-    events received / gated matches (saganfound) / emitted alerts per
-    epoch bucket.  Two map-side aggregations + one tiny outer join on
-    the bucket key."""
+    events received / gated matches (saganfound) / alerts (noalert
+    rules excluded, as in sink_counts) per epoch bucket.  Two map-side
+    aggregations + one tiny outer join on the bucket key."""
     bucket = (F.floor(F.col("epoch") / interval_sec) * interval_sec) \
         .alias("bucket")
     recv = parsed.groupBy(bucket).agg(
         F.count("*").alias("events_received"))
     gated = correlated.filter(F.col("xbit_pass") & F.col("flexbit_pass"))
     found = gated.groupBy(bucket).agg(F.count("*").alias("saganfound"))
-    alerts = (emitted(correlated).groupBy(bucket)
+    alerts = (correlated.filter(_is_alert(ruleset)).groupBy(bucket)
               .agg(F.count("*").alias("alert_total")))
     return (recv.join(found, "bucket", "left")
             .join(alerts, "bucket", "left")
@@ -241,9 +242,7 @@ def sink_counts(correlated: DataFrame, parsed: DataFrame,
     The received/processed/ignored triple is ONE conditional aggregation
     pass over the parsed frame (map-side partial agg) — not separate
     kept/dropped scans, which would each recompute the upstream."""
-    noalert = [r.sid for r in ruleset.rules if r.noalert]
     gated = correlated.filter(F.col("xbit_pass") & F.col("flexbit_pass"))
-    is_emitted = ~F.col("suppress_after") & ~F.col("suppress_thresh")
     agg = gated.agg(
         F.count("*").alias("saganfound"),
         F.sum(F.when(F.col("after_key").isNotNull() &
@@ -251,8 +250,8 @@ def sink_counts(correlated: DataFrame, parsed: DataFrame,
               ).alias("after_total"),
         F.sum(F.when(F.col("suppress_thresh"), 1).otherwise(0)
               ).alias("threshold_total"),
-        F.sum(F.when(is_emitted & ~F.col("sid").isin(noalert or [-1]),
-                     1).otherwise(0)).alias("alert_total"),
+        F.sum(F.when(_is_alert(ruleset), 1).otherwise(0)
+              ).alias("alert_total"),
     )
     base = parsed.agg(
         F.count("*").alias("events_received"),

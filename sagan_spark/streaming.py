@@ -206,9 +206,9 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
                      state_timeout_ms: int | None = None,
                      late_rows=None):
     """transcripts stream → correlated stream (CORR_SCHEMA; the rows that
-    pass the gates and survive suppression, ``route.emitted``, are the
-    emit set — routing and enrichment are the caller's).  Rulesets with
-    ``dynamic_load`` rules are refused (``dynamic.require_no_dynamic``).
+    pass the gates and survive suppression are the emit set — routing
+    and enrichment are the caller's).  Rulesets with ``dynamic_load``
+    rules are refused (``dynamic.require_no_dynamic``).
 
     ``state_timeout_ms=None`` (default) derives the eviction timeout from
     the ruleset's largest window (default_state_timeout_ms); pass 0 to

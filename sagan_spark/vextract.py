@@ -1,9 +1,11 @@
-"""Vectorized batch extraction for the matcher's "complex rule" path.
+"""Vectorized batch extraction: the matcher's one extraction path.
 
-Replaces the per-row Python loop (extract → flow → gates) with pandas /
-numpy column operations over each rule's alive subset, per the
-parse-once design of SURVEY §2.3 X1 ("one pass of a compiled IP+port
-regex per text batch"):
+Every rule's alive rows pass through ``assemble_extract`` — a rule that
+parses nothing gets the host fallback addressing (engine.c:967-1045) —
+and then through only the gate masks that rule has.  The per-row Python
+loop (extract → flow → gates) becomes pandas / numpy column operations
+over each rule's alive subset, per the parse-once design of SURVEY
+§2.3 X1 ("one pass of a compiled IP+port regex per text batch"):
 
 * the IP/port cache (the encoding zoo of /root/reference/src/parsers/
   ip.c:32-61) is built with ONE ``str.extractall`` C-regex pass for the
@@ -80,12 +82,10 @@ _IPV4_SPLIT_RE = re.compile(rf"^({_OCT})\.({_OCT})\.({_OCT})\.({_OCT})$")
 class BatchExtract:
     """Per-batch lazy extraction context (one instance per Arrow batch)."""
 
-    def __init__(self, text: pd.Series, tool: pd.Series,
-                 default_port: int = DEFAULT_PORT, rulebase=None):
+    def __init__(self, text: pd.Series, tool: pd.Series, rulebase=None):
         # positional indexing throughout: row labels == positions
         self.text = text.reset_index(drop=True)
         self.tool = tool.reset_index(drop=True)
-        self.default_port = default_port
         self.rulebase = compile_rulebase(rulebase)
         self._san: pd.Series | None = None
         self._hits: dict[int, list] = {}      # exotic row → [IpHit...]
@@ -130,11 +130,11 @@ class BatchExtract:
                 mr = mr[mr["match"] < 30]          # MAX_PARSE_IP
                 mr["port"] = pd.to_numeric(
                     mr["port"], errors="coerce").fillna(0).astype(np.int64)
-                mr.loc[mr["port"] == 0, "port"] = self.default_port
+                mr.loc[mr["port"] == 0, "port"] = DEFAULT_PORT
                 self._mr.append(mr)
         for r in todo[exotic]:
             self._hits[r] = parse_ip_cache(
-                str(self.text.iloc[r]), self.default_port)
+                str(self.text.iloc[r]), DEFAULT_PORT)
         self._hits_done[todo] = True
         self._scan_version += 1
 
@@ -262,8 +262,7 @@ def _proto_program(tools: np.ndarray) -> np.ndarray:
 
 
 def assemble_extract(rule, ctx: BatchExtract, alive: np.ndarray,
-                     conv_np: np.ndarray, tool_np: np.ndarray,
-                     default_port: int, default_proto: str) -> dict:
+                     conv_np: np.ndarray, tool_np: np.ndarray) -> dict:
     """Vectorized extract_for_rule (semantics.py): same precedence —
     normalize < parse_* < host fallback (engine.c:842-1045)."""
     n = alive.size
@@ -329,9 +328,9 @@ def assemble_extract(rule, ctx: BatchExtract, alive: np.ndarray,
     conv = conv_np[alive]
     ip_src = np.where(ip_src == "", conv, ip_src)
     ip_dst = np.where(ip_dst == "", conv, ip_dst)
-    src_port = np.where(src_port == 0, default_port, src_port)
-    dst_port = np.where(dst_port == 0, default_port, dst_port)
-    proto = np.where(proto == "", default_proto, proto)
+    src_port = np.where(src_port == 0, DEFAULT_PORT, src_port)
+    dst_port = np.where(dst_port == 0, DEFAULT_PORT, dst_port)
+    proto = np.where(proto == "", DEFAULT_PROTO, proto)
     return {"ip_src": ip_src, "src_port": src_port, "ip_dst": ip_dst,
             "dst_port": dst_port, "proto": proto, "username": username,
             "hash": hsh}

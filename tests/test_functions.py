@@ -192,25 +192,40 @@ def test_cosine_dup_pairs_subset_of_bruteforce(vecs):
     assert len(mine) / len(truth) >= 0.6  # banding recall floor
 
 
-def test_cosine_dup_collapse_collision_safe(vecs, monkeypatch):
-    """The exact-duplicate collapse keys its shuffle by xxhash64 of the
-    vector (8 bytes on the wire at 100 TB, not the raw array).  A hash
-    collision must not corrupt the output: force EVERY vector (including
-    real duplicate clusters) onto ONE hash key by monkeypatching
-    _vec_key and assert the result — pairs AND cosines — is identical
-    to the unpatched run (the representative-equality check re-collapses
-    the losers by the raw vector)."""
-    from sagan_spark.functions import similarity as S
-    dups = (vecs.filter(F.col("vec_id") < 5)
-            .withColumn("vec_id", F.col("vec_id") + 100))
-    corpus = vecs.unionByName(dups)
-    want = {(r["id_a"], r["id_b"], r["cosine"]) for r in
-            S.cosine_dup_pairs(corpus, threshold=0.9, dim=16).collect()}
-    monkeypatch.setattr(S, "_vec_key",
-                        lambda col: F.lit(0).cast("long"))
-    got = {(r["id_a"], r["id_b"], r["cosine"]) for r in
-           S.cosine_dup_pairs(corpus, threshold=0.9, dim=16).collect()}
-    assert want and got == want
+def test_cosine_dup_duplicate_clusters(spark, vecs):
+    """Exact-duplicate clusters collapse to one representative and
+    re-expand: every within-cluster pair has cosine 1.0, a duplicated
+    zero vector yields no pair (its cosine is undefined), and the
+    cross-cluster pairs are the base corpus's pairs expanded over the
+    cluster members."""
+    from itertools import combinations
+    from sagan_spark.functions.similarity import cosine_dup_pairs
+    zero = spark.createDataFrame([(40, [0.0] * 16)],
+                                 "vec_id long, embedding array<float>")
+    base = vecs.unionByName(zero)
+    # clusters {i, 100+i, 200+i} for i in 0..4, and {40, 140, 240}
+    clustered = base.filter(F.col("vec_id").isin(0, 1, 2, 3, 4, 40))
+    corpus = base
+    for shift in (100, 200):
+        corpus = corpus.unionByName(
+            clustered.withColumn("vec_id", F.col("vec_id") + shift))
+
+    def members(i):
+        return [i, 100 + i, 200 + i] if i in (0, 1, 2, 3, 4, 40) else [i]
+
+    def pairs(df):
+        return {(r["id_a"], r["id_b"], r["cosine"]) for r in
+                cosine_dup_pairs(df, threshold=0.9, dim=16).collect()}
+
+    base_pairs = pairs(base)
+    got = pairs(corpus)
+    within = {(a, b, 1.0) for i in (0, 1, 2, 3, 4)
+              for a, b in combinations(members(i), 2)}
+    cross = {(min(x, y), max(x, y), c) for a, b, c in base_pairs
+             for x in members(a) for y in members(b)}
+    assert base_pairs and within <= got
+    assert not {p for p in got if 40 in (p[0] % 100, p[1] % 100)}
+    assert got - within == cross
 
 
 def test_ivf_topk_runs(vecs):

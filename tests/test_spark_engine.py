@@ -327,6 +327,54 @@ def test_intel_and_geoip_gates_equality(spark):
     assert_counters_equal(o, res)
 
 
+_NOALERT_NOEVE = (
+    'alert syslog any any -> any any (msg:"quiet"; content:"login failed";'
+    ' noalert; sid:1;)\n'
+    'alert syslog any any -> any any (msg:"no eve"; content:"stage"; '
+    'noeve; sid:2;)\n'
+    'alert syslog any any -> any any (msg:"both"; content:"login"; sid:3;)')
+
+
+def _noalert_noeve_rows():
+    # turns spread over several hours, so perfmon sees several buckets
+    return _rows_from({
+        "c1": [(0, "login failed", 0), (1, "stage one", 4000),
+               (2, "login failed again", 8000)],
+        "c2": [(0, "stage two", 10), (1, "login ok", 3700),
+               (2, "nothing", 7300)],
+    })
+
+
+def test_noalert_noeve_equal_oracle(spark):
+    """noalert drops a rule's rows from the alert sink and alert_total,
+    noeve from the eve_alert sink (output.c:81-93)."""
+    rules = compile_ruleset(_NOALERT_NOEVE)
+    o, res = run_both(spark, _noalert_noeve_rows(), rules)
+    assert {a["sid"] for a in o["alerts"]} == {2, 3}
+    assert {a["sid"] for a in o["eve_alerts"]} == {1, 3}
+    assert_alerts_equal(o, res)
+    assert_counters_equal(o, res, keys=("saganfound", "alert_total"))
+    got = sorted((r["conv_id"], r["turn_idx"], r["signature_id"])
+                 for r in res.eve_alerts.collect())
+    assert got == sorted((a["conv_id"], a["turn_idx"], a["sid"])
+                         for a in o["eve_alerts"])
+
+
+def test_perfmon_alert_total_equals_sink_counts(spark):
+    """perfmon's per-bucket alert_total counts the same alert rows as
+    the counter block: noalert rules excluded."""
+    from pyspark.sql import functions as F
+    from sagan_spark.parse import parse_transcripts
+    from sagan_spark.route import perfmon_report
+    rules = compile_ruleset(_NOALERT_NOEVE)
+    df = spark_df_from_rows(spark, _noalert_noeve_rows())
+    res = run_pipeline(spark, df, rules)
+    perfmon = perfmon_report(parse_transcripts(df), res.correlated, rules)
+    assert perfmon.count() > 1
+    total = perfmon.agg(F.sum("alert_total")).first()[0]
+    assert total == res.counters.first()["alert_total"]
+
+
 def test_alert_reference_and_gen_msg_columns(spark):
     """J2/J3 wired into the alert sink: ref_urls is the sorted,
     comma-joined [Xref => url] block (references.c:141-209); gen_msg from

@@ -65,8 +65,7 @@ def _assert_equiv(rule, texts):
     ctx = _ctx(texts)
     alive = np.arange(len(texts))
     got = assemble_extract(rule, ctx, alive, np.array(convs, dtype=object),
-                           np.array(["sshd"] * len(texts), dtype=object),
-                           514, "udp")
+                           np.array(["sshd"] * len(texts), dtype=object))
     want = _row_extract(rule, texts, convs)
     for i, w in enumerate(want):
         for k in ("ip_src", "src_port", "ip_dst", "dst_port", "proto",
@@ -94,6 +93,13 @@ def test_zoo_hash_proto_normalize():
         'sid:1;)'), ZOO)
 
 
+def test_zoo_fallback_addressing():
+    """A rule that extracts nothing: every field is the host fallback."""
+    _assert_equiv(_rule(
+        'alert syslog any any -> any any (msg:"m"; content:""; sid:1;)'),
+        ZOO)
+
+
 def test_flow_mask_matches_row_flow():
     rule = _rule('alert syslog 10.0.0.0/8 any -> any any (msg:"m"; '
                  'parse_src_ip: 1; content:""; sid:1;)')
@@ -102,8 +108,7 @@ def test_flow_mask_matches_row_flow():
     ctx = _ctx(texts)
     alive = np.arange(len(texts))
     ex = assemble_extract(rule, ctx, alive, np.array(convs, dtype=object),
-                          np.array(["sshd"] * len(texts), dtype=object),
-                          514, "udp")
+                          np.array(["sshd"] * len(texts), dtype=object))
     got = flow_mask(rule, ctx, ex)
     want = [flow_pass(rule, w) for w in _row_extract(rule, texts, convs)]
     assert got.tolist() == want
