@@ -11,15 +11,17 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-_SHIPPED: set[int] = set()
+_SHIPPED: set[str] = set()   # applicationIds the package was shipped to
 
 
 def ship_package(spark: SparkSession) -> None:
     """Make ``sagan_spark`` importable on executor python workers
     regardless of the driver's cwd — the in-process equivalent of
     ``spark-submit --py-files sagan_spark.zip``.  Idempotent per
-    session."""
-    if id(spark) in _SHIPPED:
+    application: keyed by ``applicationId``, since a stopped session's
+    ``id()`` can be handed to a later one."""
+    app_id = spark.sparkContext.applicationId
+    if app_id in _SHIPPED:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(tempfile.gettempdir(),
@@ -32,7 +34,7 @@ def ship_package(spark: SparkSession) -> None:
                     rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                     z.write(full, rel)
     spark.sparkContext.addPyFile(zpath)
-    _SHIPPED.add(id(spark))
+    _SHIPPED.add(app_id)
 
 
 def get_spark(app: str = "sagan_spark",

@@ -110,6 +110,11 @@ def main() -> int:
     # MEDIAN rep (never the best window — measurement-hygiene per the
     # shared-host variance documented in BENCH/BASELINE.md)
     series_path = os.path.join(REPO, "BENCH", "scaling_series.jsonl")
+    # the code under test, stamped before the first rep appends to the
+    # tracked series; ``-dirty`` keeps uncommitted code out of HEAD's pool
+    commit = subprocess.run(
+        ["git", "-C", REPO, "describe", "--always", "--dirty"],
+        capture_output=True, text=True).stdout.strip()
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     reps: list[dict] = []
     for i in range(args.reps):
@@ -136,9 +141,7 @@ def main() -> int:
             "steal_N_pct": steal_pct(s0, s1),
             "steal_4N_pct": steal_pct(s1, s2),
             "cores_per_executor": E, "shards": args.shards,
-            "commit": subprocess.run(
-                ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
-                capture_output=True, text=True).stdout.strip(),
+            "commit": commit,
         }
         reps.append(rep)
         with open(series_path, "a") as f:
@@ -158,10 +161,7 @@ def main() -> int:
         # records its commit, and mixing code versions in one median
         # would let stale measurements outvote the current engine
         # (the full series stays in the jsonl as history)
-        head = subprocess.run(
-            ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True).stdout.strip()
-        cur = [r for r in all_reps if r.get("commit") == head]
+        cur = [r for r in all_reps if r.get("commit") == commit]
         if cur:
             all_reps = cur
     else:

@@ -33,8 +33,11 @@ sys.path.insert(0, REPO)
 
 
 def _commit() -> str:
+    """Full hash of the code under test, suffixed ``-dirty`` when the
+    working tree has uncommitted changes."""
     try:
-        return subprocess.run(["git", "-C", REPO, "rev-parse", "HEAD"],
+        return subprocess.run(["git", "-C", REPO, "describe", "--always",
+                               "--dirty", "--abbrev=40"],
                               capture_output=True, text=True,
                               timeout=10).stdout.strip() or "unknown"
     except Exception:
