@@ -39,7 +39,9 @@ Execution strategy — ONE plan, batch and streaming alike:
   mapInPandas`` over every matched row (stateless rows key by conv_id).
   The cluster column is the hot-conversation salt: a hot conversation's
   rows spread across its independent clusters.  Streaming:
-  ``groupBy(key).applyInPandasWithState`` over the same fold.
+  ``groupBy(pmod(xxhash64(key), N_BUCKETS)).applyInPandasWithState``,
+  folding each key of a bucket with that key's own stores (streaming
+  module docstring).
 * Deterministic (epoch, conv_id, turn_idx, rule_idx) order inside each
   key — the batch replacement for the reference's wall-clock arrival
   order (SURVEY §2.6).

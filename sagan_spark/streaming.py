@@ -5,16 +5,17 @@ named pipe, /root/reference/src/sagan.c:1142-1345) re-expressed as:
     readStream (file source over the transcripts directory)
       → PARSE / IGNORE     (same narrow codegen expressions as batch)
       → MATCH              (same stateless vectorized mapInPandas matcher)
-      → CORRELATE          (applyInPandasWithState keyed by the batch
-                            engine's state-group key; state = the four
-                            stores, JSON-encoded in the GroupState.  Store
+      → CORRELATE          (applyInPandasWithState grouped by a hash
+                            bucket of the batch engine's state-group key;
+                            each key keeps its own four stores,
+                            JSON-encoded in its bucket's GroupState.  Store
                             ENTRIES evict by EVENT time (_make_pruner —
                             the Clean_IPC_Object analog,
-                            src/ipc.c:79-200); the processing-time timeout
-                            only GCs whole groups, so a stalled or
+                            src/ipc.c:79-200); processing-time eviction
+                            only drops whole keys, so a stalled or
                             backfilled source cannot lose event-time-live
-                            entries unless the group itself goes
-                            wall-clock silent)
+                            entries unless the key itself goes wall-clock
+                            silent)
 
 The result is the correlated stream (CORR_SCHEMA).  Routing is the
 caller's: write the stream to any streaming sink and apply the batch
@@ -24,25 +25,49 @@ wrote.
 Watermark note: the reference has NO event-time semantics — correlation
 windows use wall-clock arrival (after.c:63-80).  The batch engine made
 that deterministic via (epoch, turn_idx) ordering; streaming preserves
-arrival-order semantics per micro-batch by sorting each group's rows on
-(epoch, turn_idx, rule_idx) before folding, so replaying the same file
-sequence reproduces the batch result (tested in
+arrival-order semantics per micro-batch by sorting each key's rows on
+(epoch, conv_id, turn_idx, rule_idx) before folding, so replaying the
+same file sequence reproduces the batch result (tested in
 tests/test_streaming.py).
 
 Key routing is the batch engine's: correlate.state_key_cols plans one
 state-group key per matched row (conv_id for conv-derived clusters, the
 row's store key where every row touches one store, one group per cluster
-otherwise), and ONE applyInPandasWithState grouped by that key runs the
-same unified engine-order fold as batch.  Batch and streaming therefore
-cannot diverge on which rows share state.
+otherwise), so batch and streaming cannot diverge on which rows share
+state.  The stream is grouped by ``pmod(xxhash64(key), N_BUCKETS)`` and
+ONE applyInPandasWithState call per bucket and micro-batch folds every
+key present: the bucket's rows are sorted by (key, engine order), split on
+key boundaries, and each slice runs the batch engine's unified_fold
+against that key's own CorrState.  The fixed Python cost of a call (Arrow
+conversion, concat, sort, output batches) is paid once per bucket instead
+of once per key.  Only the keys present in a micro-batch are decoded and
+re-encoded; the others ride along as stored strings.
 
-Event-time bound (the one the pruner assumes): store eviction is exact
-while event-time disorder stays within ONE horizon (the largest rule
-window) of the max epoch each state group has ever seen — the max is
-persisted in the GroupState, so the bound spans micro-batches.  A source
-backfilling OLDER than that may consult already-pruned entries; such rows
-are counted in the ``late_rows`` accumulator (streaming_alerts attaches
-one; see its docstring) so silent state loss is observable.
+Exactness bound, per state key (the one the pruner assumes): store
+eviction is exact while event-time disorder stays within ONE horizon (the
+largest rule window) of the max epoch that KEY has ever seen — each key's
+max is persisted in its own entry of the bucket state, so the bound spans
+micro-batches and one key's epochs never prune or age another key in the
+same bucket.  A source backfilling OLDER than that may consult
+already-pruned entries; such rows are counted per key in the
+``late_rows`` accumulator (streaming_alerts attaches one; see its
+docstring) so silent state loss is observable.
+
+Processing-time eviction is per key too: each entry carries the
+processing time of the last micro-batch that brought its key rows, and a
+key silent for longer than the state timeout is dropped on its bucket's
+next call.  The bucket's own ProcessingTimeTimeout, re-armed on every
+data call, removes the whole state once every key in it is silent.
+
+N_BUCKETS is a module constant, not derived from
+``spark.sql.shuffle.partitions``: the bucket count is baked into the plan
+as a literal while the checkpoint restores state under the old count, so
+a conf-derived count would re-route keys away from their state when a
+stream restarts with another shuffle-partition setting.  Changing
+N_BUCKETS therefore invalidates existing checkpoints.  It also caps the
+stateful operator's parallelism at N_BUCKETS tasks, which on hosts with
+at most 8 cores equals the session's shuffle-partition count
+(session.get_spark).
 """
 
 from __future__ import annotations
@@ -50,6 +75,7 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from .correlate import (
@@ -68,8 +94,14 @@ from .match import run_match
 from .parse import parse_transcripts, split_ignored
 from .rules.compiler import RuleSet
 
-# GroupState layout: one JSON blob (the four stores, key-stringified)
-STATE_SCHEMA = "state string"
+# bucket count of the stateful operator; fixed, because a checkpoint's
+# state is routed by it (module docstring)
+N_BUCKETS = 8
+
+# GroupState layout, one row per bucket: its state keys, each key's
+# _encode_state JSON (four stores + max epoch) and the processing time (ms)
+# of the key's last rows, as parallel arrays
+STATE_SCHEMA = "keys array<string>, blobs array<string>, seen array<bigint>"
 
 
 def _encode_state(st: CorrState, max_epoch: int = 0) -> str:
@@ -111,8 +143,9 @@ def _horizon_s(ruleset: RuleSet) -> int:
 def default_state_timeout_ms(ruleset: RuleSet) -> int:
     """Eviction default: 2× the largest rule window — the streaming analog
     of the reference's Clean_IPC_Object stale-entry eviction
-    (src/ipc.c:79-200).  Without a timeout, per-conv GroupState would grow
-    unboundedly across the conv_id keyspace in a long-running stream."""
+    (src/ipc.c:79-200).  Without a timeout, the per-key entries of the
+    bucket states would grow unboundedly across the conv_id keyspace in
+    a long-running stream."""
     return 2 * _horizon_s(ruleset) * 1000
 
 
@@ -120,10 +153,10 @@ def _make_pruner(ruleset: RuleSet):
     """Event-time state eviction (the Clean_IPC_Object analog,
     src/ipc.c:79-200, driven by EVENT epochs instead of wall clock):
     drops store entries whose liveness window ended more than one full
-    horizon before the max event epoch seen by this group — exact under
-    event-time disorder bounded by the horizon (one largest-window's
-    worth of backfill), and the real per-group state-size bound; the
-    processing-time GroupState timeout then only GCs groups wholesale.
+    horizon before the max event epoch seen by this state key — exact
+    under event-time disorder bounded by the horizon (one largest-window's
+    worth of backfill), and the real per-key state-size bound; the
+    processing-time timeout then only evicts whole keys.
 
     Flexbit entries are pruned ONLY when the ruleset has no `count`
     clause: count is expiry-agnostic (flexbit-mmap.c:683-744 checks
@@ -152,41 +185,74 @@ def _make_pruner(ruleset: RuleSet):
     return prune
 
 
-def _group_correlator(ruleset: RuleSet, timeout_ms: int = 0,
-                      late_rows=None):
-    """applyInPandasWithState function, one call per state group and
-    micro-batch: the group's rows are concatenated and sorted ONCE (the
-    global sort keeps cross-chunk order exact), then folded through the
-    same unified engine-order fold as batch, with the stores persisted in
-    the GroupState across micro-batches.  Store entries are evicted by
-    EVENT time via _make_pruner on every invocation, anchored to the max
-    epoch the group has EVER seen (persisted in the state blob) — rows
-    older than one horizon behind that anchor may consult already-pruned
-    entries and are tallied into the ``late_rows`` accumulator."""
-    fold = unified_fold(ruleset)
+def _fold_spans(fold):
+    """unified_fold over a frame sorted by state key: ``spans`` lists
+    each key's (start, stop, CorrState), and every slice folds against
+    its own key's stores."""
+    def fold_spans(pdf: pd.DataFrame, spans):
+        out = ([], [], [], [])
+        for a, b, st in spans:
+            for acc, part in zip(out, fold(pdf.iloc[a:b], st)):
+                acc.extend(part)
+        return out
+
+    return fold_spans
+
+
+def _bucket_correlator(ruleset: RuleSet, timeout_ms: int = 0,
+                       late_rows=None):
+    """applyInPandasWithState function, one call per bucket and
+    micro-batch.  The bucket state holds one entry per state key (its
+    stores and max epoch as _encode_state JSON, and the processing time
+    of its last rows).  A data call first drops the keys silent for
+    longer than ``timeout_ms``, then concatenates and sorts the bucket's
+    rows ONCE by (key, engine order) and folds each key's slice through
+    the same unified engine-order fold as batch with that key's stores.
+    Each present key is then pruned by EVENT time (_make_pruner) against
+    the max epoch that key has EVER seen; its rows older than one horizon
+    behind that anchor may consult already-pruned entries and are
+    tallied into the ``late_rows`` accumulator."""
+    fold_spans = _fold_spans(unified_fold(ruleset))
     prune = _make_pruner(ruleset)
     horizon = _horizon_s(ruleset)
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
+    def fn(bucket, pdfs: Iterator[pd.DataFrame],
+           state) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:          # every key in the bucket is silent
             state.remove()
             return
-        st, max_epoch = (_decode_state(state.get[0]) if state.exists
-                         else (CorrState(), 0))
+        now = state.getCurrentProcessingTimeMs()
+        stored = zip(*state.get) if state.exists else ()
+        entries = {k: (blob, seen) for k, blob, seen in stored
+                   if not timeout_ms or now - seen <= timeout_ms}
         chunks = [c for c in pdfs if len(c)]
         if chunks:
             pdf = (pd.concat(chunks, ignore_index=True)
-                   .drop(columns=["_key"])
-                   .sort_values(_SORT).reset_index(drop=True))
-            if late_rows is not None and max_epoch:
-                late = int((pdf["epoch"] < max_epoch - horizon).sum())
-                if late:
-                    late_rows.add(late)
-            max_epoch = max(max_epoch, int(pdf["epoch"].max()))
-            yield from apply_fold_to_batches(fold, st, [pdf])
-        if max_epoch:
-            prune(st, max_epoch)
-        state.update((_encode_state(st, max_epoch),))
+                   .drop(columns=["_bucket"])
+                   .sort_values(["_key"] + _SORT).reset_index(drop=True))
+            keys = pdf.pop("_key").to_numpy()
+            epochs = pdf["epoch"].to_numpy()
+            cuts = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1),
+                    len(keys)]
+            spans, anchors, late = [], [], 0
+            for a, b in zip(cuts[:-1], cuts[1:]):
+                k = keys[a]
+                st, max_epoch = (_decode_state(entries[k][0])
+                                 if k in entries else (CorrState(), 0))
+                if max_epoch:
+                    late += int((epochs[a:b] < max_epoch - horizon).sum())
+                spans.append((a, b, st))
+                # epoch leads the sort within a key: its last row is its max
+                anchors.append((k, max(max_epoch, int(epochs[b - 1]))))
+            if late_rows is not None and late:
+                late_rows.add(late)
+            yield from apply_fold_to_batches(fold_spans, spans, [pdf])
+            for (_, _, st), (k, max_epoch) in zip(spans, anchors):
+                prune(st, max_epoch)
+                entries[k] = (_encode_state(st, max_epoch), now)
+        state.update((list(entries),
+                      [blob for blob, _ in entries.values()],
+                      [seen for _, seen in entries.values()]))
         if timeout_ms:
             state.setTimeoutDuration(timeout_ms)
 
@@ -215,7 +281,7 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
     explicitly opt out of eviction.
 
     ``late_rows``: optional Spark accumulator; rows arriving with
-    epoch < a group's persisted max epoch - horizon (the bound under
+    epoch < their key's persisted max epoch - horizon (the bound under
     which event-time eviction is exact) are tallied into it, so backfill
     deeper than one horizon is observable instead of silently consulting
     pruned state.  Pass ``spark.sparkContext.accumulator(0)``."""
@@ -227,11 +293,15 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
     base, stateful = with_default_flags(run_match(kept, ruleset), ruleset)
     if not stateful:
         return base
+    from pyspark.sql import functions as F
+
     key, _ = state_key_cols(ruleset)
     return (base.withColumn("_key", key)
-            .groupBy("_key")
+            .withColumn("_bucket", F.pmod(F.xxhash64("_key"),
+                                          F.lit(N_BUCKETS)))
+            .groupBy("_bucket")
             .applyInPandasWithState(
-                _group_correlator(ruleset, state_timeout_ms, late_rows),
+                _bucket_correlator(ruleset, state_timeout_ms, late_rows),
                 outputStructType=CORR_SCHEMA,
                 stateStructType=STATE_SCHEMA,
                 outputMode="append",
